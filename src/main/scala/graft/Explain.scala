@@ -7,11 +7,32 @@ import org.apache.spark.sql.SparkSession
   * PushedFilters reaching the parquet scan, broadcast joins on
   * dimension tables, WholeStageCodegen spans covering the hot path.
   *
-  *   sbt 'runMain graft.Explain [queryName] [sfDir]'
+  *   sbt 'runMain graft.Explain [name[,name...]] [sfDir]'
   */
 object Explain {
+
+  /** The query names to explain, sorted when none are given. A
+    * comma-separated list (one sbt/session spin-up per optimization
+    * batch) is trimmed and its blanks dropped; an unknown name or a
+    * list with no names fails here, before any session starts.
+    */
+  private[graft] def targets(arg: Option[String]): Seq[String] = {
+    val known = SparkEntry.queries.keySet
+    arg match {
+      case None => known.toSeq.sorted
+      case Some(list) =>
+        val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+        require(names.nonEmpty,
+          s"no query name in '$list' (omit the argument to explain every query)")
+        val unknown = names.filterNot(known)
+        require(unknown.isEmpty,
+          s"unknown query: ${unknown.mkString(", ")} (try: graft.Main query list)")
+        names
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    val name = args.headOption
+    val names = targets(args.headOption)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val builder = SparkSession.builder()
       .master("local[4]")
@@ -20,18 +41,13 @@ object Explain {
     Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // comma-separated names supported: one sbt/session spin-up per
-    // optimization batch instead of one per query
-    val targets = name match {
-      case Some(n) => n.split(",").toSeq.map(q => q -> SparkEntry.queries(q))
-      case None    => SparkEntry.queries.toSeq.sortBy(_._1)
-    }
-    targets.foreach { case (n, fn) =>
+    val queries = SparkEntry.queries
+    names.foreach { n =>
       println(s"\n========== $n ==========")
       if (SparkEntry.sideEffecting(n))
         println(s"(skipped: $n performs real file I/O when invoked — " +
           "run it through Verify/Bench instead)")
-      else fn(spark, sfDir).explain("formatted")
+      else queries(n)(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -47,7 +47,10 @@ object Urls {
     * instead of three more anchored regexes. A non-matching url
     * passes through regexp_replace unchanged (size ≠ 4 ⇒ null,
     * exactly the old no-match test); `` cannot occur in a valid
-    * absolute URL (control chars must be %-encoded).
+    * absolute URL (control chars must be %-encoded), so any input
+    * holding one is null up front — a non-matching string with three
+    * raw U+0001 bytes would otherwise split into four parts and
+    * canonicalize to garbage.
     */
   def canonicalizeUrl(url: Column): Column = {
     val arr = split(
@@ -74,7 +77,8 @@ object Urls {
       .otherwise(lit(""))
     val params = array_join(
       array_sort(filter(split(query, "&"), p => !trackingParam(p))), "&")
-    when(size(arr) =!= 4 || host0 === "", lit(null).cast("string"))
+    when(url.contains("\u0001") || size(arr) =!= 4 || host0 === "",
+        lit(null).cast("string"))
       .otherwise(concat(scheme, lit("://"), host, path,
         when(params === "", lit("")).otherwise(concat(lit("?"), params))))
   }

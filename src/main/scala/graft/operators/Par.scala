@@ -43,7 +43,11 @@ import org.apache.spark.sql.execution.exchange.Exchange
   *     latency-bound side effect (foreachPartition FS creates): past a
   *     handful of concurrent writers the filesystem round-trip, not
   *     CPU, is the wall, and r16's driver measured the uncapped spread
-  *     SLOWER at 32 cores than 8 on exactly that site.
+  *     SLOWER at 32 cores than 8 on exactly that site. `cap` bounds
+  *     only the spread this inserts: a plan returned untouched (already
+  *     exchanged, or split at least as wide as the session) keeps its
+  *     own partition count, so a caller that needs a hard writer bound
+  *     must repartition to it itself.
   */
 object Par {
 

@@ -59,6 +59,13 @@ class UrlsSpec extends SparkSpec {
       === Seq(null, null, null, null))
   }
 
+  test("raw U+0001 (the split delimiter) in any input is null") {
+    // three raw bytes in a non-matching string used to split into the
+    // four scheme/host/path/tail parts and canonicalize to garbage
+    assert(canon("a\u0001b\u0001/c\u0001d", "https://h.com/p\u0001q")
+      === Seq(null, null))
+  }
+
   test("canonical form is a fixed point: canon(canon(u)) == canon(u)") {
     // property over generated messy URLs: random case, optional default
     // or odd port, duplicate slashes, shuffled params with tracking
