@@ -1,13 +1,17 @@
 package graft
 
 import java.io.{DataOutput, File}
+import java.net.URI
 import java.nio.file.{Files, LinkOption}
 import java.nio.file.attribute.PosixFilePermissions
 import java.security.Principal
 
 import scala.annotation.nowarn
 
-import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** The `file:` filesystem every graft session uses
@@ -19,10 +23,26 @@ import org.apache.hadoop.fs.permission.FsPermission
   * the first permission/owner/group read of a status (every file of a
   * `listFiles`, which builds a `LocatedFileStatus` from each). Bytes,
   * `.crc` files, mode bits, owner and group are the stock ones.
+  * `FileContext` (Spark's streaming checkpoints on `file:`) gets the
+  * same raw layer through [[LocalFs.Context]].
   */
 class LocalFs extends LocalFileSystem(new LocalFs.Raw)
 
 object LocalFs {
+
+  /** `FileContext`'s `file:` (`fs.AbstractFileSystem.file.impl`):
+    * Hadoop's `local.LocalFs` — checksums over a delegate to the raw
+    * filesystem — with [[Raw]] as the delegate. */
+  final class Context(uri: URI, conf: Configuration) extends ChecksumFs(new RawContext(uri, conf))
+
+  /** Hadoop's `local.RawLocalFs`, overrides and all, over [[Raw]]. */
+  private final class RawContext(uri: URI, conf: Configuration)
+      extends DelegateToFileSystem(uri, new Raw, conf, FsConstants.LOCAL_FS_URI.getScheme, false) {
+    override def getUriDefaultPort: Int = -1
+    override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults
+    override def getServerDefaults: FsServerDefaults = LocalConfigKeys.getServerDefaults
+    override def isValidName(src: String): Boolean = true
+  }
 
   final class Raw extends RawLocalFileSystem {
     /** chmod(2) in-process for the nine rwx bits — what the native
@@ -38,6 +58,14 @@ object LocalFs {
       }
 
     override def getFileStatus(f: Path): FileStatus = lazyStatus(super.getFileStatus(f))
+
+    /** The stock method forks `readlink` on `f.toString` before it
+      * stats; a path that is no symbolic link there (`FileContext`
+      * passes qualified `file:` paths, which never are) gets the plain
+      * status, as the stock method then returns, without the fork. */
+    override def getFileLinkStatus(f: Path): FileStatus =
+      if (Files.isSymbolicLink(new File(f.toString).toPath)) super.getFileLinkStatus(f)
+      else getFileStatus(f)
 
     // a directory's entries come through getFileStatus; a file's own
     // status does not

@@ -20,14 +20,15 @@ object Tables {
     * vectorized reader otherwise rejects — read as long so `t` can
     * truncate to microseconds (Spark's native precision). Set at session
     * construction — NOT mutated per-read, which would leak into
-    * unrelated reads and race across threads. `file:` is [[LocalFs]],
-    * which serves Hadoop's permission reads and writes without forking
-    * `chmod` / `ls` per file.
+    * unrelated reads and race across threads. `file:` is [[LocalFs]]
+    * for `FileSystem` and `FileContext` alike, which serves Hadoop's
+    * permission reads and writes without forking `chmod` / `ls` per file.
     */
   val sessionConfigs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
-    "spark.hadoop.fs.file.impl" -> classOf[LocalFs].getName)
+    "spark.hadoop.fs.file.impl" -> classOf[LocalFs].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Context].getName)
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")

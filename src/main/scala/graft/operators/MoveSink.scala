@@ -1,9 +1,11 @@
 package graft.operators
 
+import java.io.FileNotFoundException
+
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.util.SerializableConfiguration
 
@@ -70,14 +72,17 @@ object MoveSink {
   def run(files: DataFrame, mode: Mode, overwrite: Boolean = true): Dataset[MoveResult] = {
     val spark = files.sparkSession
     import spark.implicits._
-    val conf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    // broadcast, not captured: a captured configuration rides in every
+    // task binary and is re-parsed (about 1,000 properties) per task
+    val sc = spark.sparkContext
+    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
     val doMove = mode == Move
     val async = mode == CopyAsync
     files.select("src", "dst").as[(String, String)].mapPartitions { it =>
+      val c = conf.value.value
       it.map { case (src, dst) =>
-        if (async) issueCopyAsync(src, dst, overwrite, conf.value)
-        else transferOne(src, dst, doMove, overwrite, conf.value)
+        if (async) issueCopyAsync(src, dst, overwrite, c)
+        else transferOne(src, dst, doMove, overwrite, c)
       }
     }
   }
@@ -90,7 +95,8 @@ object MoveSink {
       val dstPath = new Path(dst)
       val srcFs = srcPath.getFileSystem(conf)
       val dstFs = dstPath.getFileSystem(conf)
-      if (!srcFs.exists(srcPath)) {
+      val srcStatus = statusOf(srcFs, srcPath)
+      if (srcStatus.isEmpty) {
         // idempotent-retry guard: src gone ∧ dst present ⇒ already done
         if (move && dstFs.exists(dstPath))
           MoveResult(src, dst, ok = true, error = null,
@@ -99,7 +105,7 @@ object MoveSink {
           MoveResult(src, dst, ok = false, error = s"source not found: $src",
             bytes = 0L, status = "failed")
       } else {
-        val size = srcFs.getFileStatus(srcPath).getLen
+        val size = srcStatus.get.getLen
         val dstExists = dstFs.exists(dstPath)
         if (dstExists && !overwrite)
           return MoveResult(src, dst, ok = false,
@@ -162,11 +168,12 @@ object MoveSink {
       val dstPath = new Path(dst)
       val srcFs = srcPath.getFileSystem(conf)
       val dstFs = dstPath.getFileSystem(conf)
-      if (!srcFs.exists(srcPath))
+      val srcStatus = statusOf(srcFs, srcPath)
+      if (srcStatus.isEmpty)
         MoveResult(src, dst, ok = false, error = s"source not found: $src",
           bytes = 0L, status = "failed")
       else {
-        val size = srcFs.getFileStatus(srcPath).getLen
+        val size = srcStatus.get.getLen
         if (dstFs.exists(dstPath) && !overwrite)
           return MoveResult(src, dst, ok = false,
             error = s"target exists and overwrite=false: $dst",
@@ -187,6 +194,12 @@ object MoveSink {
           bytes = 0L, status = "failed")
     }
   }
+
+  /** The source's one stat: `exists` followed by `getFileStatus` would
+    * be two (two HEAD requests per file on an object store). */
+  private def statusOf(fs: FileSystem, p: Path): Option[FileStatus] =
+    try Some(fs.getFileStatus(p))
+    catch { case _: FileNotFoundException => None }
 
   private def sameFs(a: FileSystem, b: FileSystem): Boolean =
     a.getUri == b.getUri

@@ -7,6 +7,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.model.LakeFile
 
@@ -83,39 +84,40 @@ object Listing {
     spark.createDataset(out.toSeq)
   }
 
-  /** O2 at scale: distributed recursive listing — immediate children of
-    * `prefix` are parallelized across tasks and each task lists its
-    * subtree with its own FileSystem handle. Removes the driver-side
-    * iterator of `list` for prefixes with millions of files (the
-    * fan-out unit is a top-level child, so a billion-file lake lists
-    * with ~|children| way parallelism; nest once more for pathological
-    * single-directory layouts).
+  /** O2 at scale: distributed recursive listing — the immediate
+    * subdirectories of `prefix` are parallelized across tasks and each
+    * task lists its subtree with its own FileSystem handle. Removes the
+    * driver-side iterator of `list` for prefixes with millions of files
+    * (the fan-out unit is a top-level directory, so a billion-file lake
+    * lists with ~|directories| way parallelism; nest once more for
+    * pathological single-directory layouts). Files directly under
+    * `prefix` (or `prefix` itself, when it is a file) become rows on
+    * the driver from the statuses its `listStatus` already holds: a
+    * task per file would only stat it again.
     */
   def listDistributed(spark: SparkSession, prefix: String): Dataset[LakeFile] = {
     import spark.implicits._
+    val sc = spark.sparkContext
     val p = new Path(prefix)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(sc.hadoopConfiguration)
     if (!fs.exists(p)) return spark.emptyDataset[LakeFile]
-    val children = fs.listStatus(p).map(_.getPath.toString).toSeq
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    spark.createDataset(children)
-      .repartition(math.max(1, math.min(children.size, 64)))
+    val (files, dirs) = fs.listStatus(p).partition(_.isFile)
+    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+    // parallelize, not a repartitioned Dataset: no shuffle to fan out a
+    // handful of path strings
+    val nested = sc.parallelize(dirs.map(_.getPath.toString).toSeq,
+        math.max(1, math.min(dirs.length, 64)))
       .mapPartitions { it =>
-        it.flatMap { child =>
-          val cp = new Path(child)
-          val cfs = cp.getFileSystem(conf.value)
-          val st = cfs.getFileStatus(cp)
-          if (st.isFile)
-            Iterator(toLakeFile(st))
-          else {
-            val out = ArrayBuffer.empty[LakeFile]
-            val files = cfs.listFiles(cp, true)
-            while (files.hasNext) out += toLakeFile(files.next())
-            out.iterator
-          }
+        val c = conf.value.value
+        it.flatMap { dir =>
+          val dp = new Path(dir)
+          val out = ArrayBuffer.empty[LakeFile]
+          val listed = dp.getFileSystem(c).listFiles(dp, true)
+          while (listed.hasNext) out += toLakeFile(listed.next())
+          out.iterator
         }
       }
+    spark.createDataset(files.map(toLakeFile).toSeq).union(spark.createDataset(nested))
   }
 
   /** Persist a listing as a parquet file-index table (Delta-style
@@ -177,8 +179,8 @@ object Listing {
   def existsProbe(paths: DataFrame, pathCol: String = "path"): DataFrame = {
     val spark = paths.sparkSession
     import spark.implicits._
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    val sc = spark.sparkContext
+    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
     paths.select(pathCol).as[String].mapPartitions { it =>
       // one FileSystem per (scheme, authority) — paths may mix filesystems
       val cache = scala.collection.mutable.HashMap.empty[String, FileSystem]
@@ -186,7 +188,7 @@ object Listing {
         val hp = new Path(p)
         val uri = hp.toUri
         val key = s"${uri.getScheme}://${uri.getAuthority}"
-        val fs = cache.getOrElseUpdate(key, hp.getFileSystem(conf.value))
+        val fs = cache.getOrElseUpdate(key, hp.getFileSystem(conf.value.value))
         (p, try fs.exists(hp) catch { case _: Exception => false })
       }
     }.toDF(pathCol, "exists")

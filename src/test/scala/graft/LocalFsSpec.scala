@@ -7,13 +7,15 @@ import java.nio.file.attribute.PosixFileAttributes
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, FileSystem, FileUtil,
+  LocalFileSystem, Options, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.util.SerializableConfiguration
 
-/** `file:` is [[LocalFs]] in every session, and it answers permission
-  * writes and reads exactly as the stock `LocalFileSystem` does, but
-  * without forking `chmod` / `ls`.
+/** `file:` is [[LocalFs]] in every session, for `FileSystem` and
+  * `FileContext` alike, and it answers permission writes and reads
+  * exactly as the stock `LocalFileSystem` does, but without forking
+  * `chmod` / `ls`.
   */
 class LocalFsSpec extends SparkSpec {
 
@@ -56,6 +58,41 @@ class LocalFsSpec extends SparkSpec {
       .map(_ => new Path("file:///").getFileSystem(conf.value).getClass.getName)
       .collect()
     assert(inTask.toSeq === Seq(classOf[LocalFs].getName))
+  }
+
+  test("FileContext on file: resolves to LocalFs.Context in the session") {
+    val fc = FileContext.getFileContext(URI.create("file:///"),
+      spark.sparkContext.hadoopConfiguration)
+    assert(fc.getDefaultFileSystem.getClass === classOf[LocalFs.Context])
+  }
+
+  test("100 FileContext create-and-rename commits fork no child process, stock layout") {
+    // a streaming checkpoint's commit: create a temp file, rename it over
+    def run(impl: Class[_]): (Long, Seq[(String, Int)]) = withDir { dir =>
+      val conf = new Configuration()
+      conf.set("fs.AbstractFileSystem.file.impl", impl.getName)
+      val fc = FileContext.getFileContext(URI.create("file:///"), conf)
+      val before = childTicks()
+      (1 to 100).foreach { i =>
+        val tmp = hp(dir.resolve(s"d/.$i.tmp"))
+        val out = fc.create(tmp, java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
+          Options.CreateOpts.createParent())
+        try out.write(Array.fill[Byte](1024)(7)) finally out.close()
+        fc.rename(tmp, hp(dir.resolve(s"d/$i.bin")), Options.Rename.OVERWRITE)
+      }
+      val ticks = childTicks() - before
+      val s = Files.walk(dir)
+      try (ticks, s.iterator().asScala.filter(_ != dir)
+        .map(p => dir.relativize(p).toString -> mode(p)).toSeq.sorted)
+      finally s.close()
+    }
+    val (ours, layout) = run(classOf[LocalFs.Context])
+    // control: Hadoop's own class forks chmod per create and readlink per rename
+    val (stock, stockLayout) = run(classOf[org.apache.hadoop.fs.local.LocalFs])
+    assert(ours === 0L)
+    assert(stock > 0L)
+    assert(layout === stockLayout)
+    assert(layout.map(_._1).contains("d/.7.bin.crc"))
   }
 
   test("create, mkdirs and setPermission leave the stock mode bits and .crc files") {

@@ -111,15 +111,27 @@ class PipelinesSpec extends SparkSpec {
 
   test("listDistributed matches driver-side list") {
     val root = mkLake()
-    write(root, "raw/a.json", "x")
+    write(root, "raw/a.json", "x")            // directly under the prefix
+    write(root, "raw/e.json", "eeeee")
     write(root, "raw/sub/b.json", "yy")
-    write(root, "raw/sub/deep/c.json", "zzz")
-    val a = graft.sources.Listing.list(spark, s"file:$root/raw")
-      .collect().map(f => (f.name.split("/").last, f.size)).toSet
-    val b = graft.sources.Listing.listDistributed(spark, s"file:$root/raw")
-      .collect().map(f => (f.name.split("/").last, f.size)).toSet
-    assert(a === b)
-    assert(a === Set(("a.json", 1L), ("b.json", 2L), ("c.json", 3L)))
+    write(root, "raw/sub/deep/c.json", "zzz") // nested directories
+    write(root, "raw/other/d.json", "dddd")
+    Files.createDirectories(root.resolve("raw/empty/deeper"))
+    /** Both listings of `prefix`, rows equal; lake-relative (name, size). */
+    def listed(prefix: String): Set[(String, Long)] = {
+      def rows(ds: org.apache.spark.sql.Dataset[graft.model.LakeFile]) =
+        ds.collect().map(f => (f.name, f.size, f.last_modified, f.creation_time)).toSeq.sortBy(_._1)
+      val a = rows(graft.sources.Listing.list(spark, s"file:$root/$prefix"))
+      val b = rows(graft.sources.Listing.listDistributed(spark, s"file:$root/$prefix"))
+      assert(a === b, prefix)
+      a.map(r => (r._1.stripPrefix(s"$root/"), r._2)).toSet
+    }
+    assert(listed("raw") === Set(("raw/a.json", 1L), ("raw/e.json", 5L),
+      ("raw/sub/b.json", 2L), ("raw/sub/deep/c.json", 3L), ("raw/other/d.json", 4L)))
+    assert(listed("raw/sub") === Set(("raw/sub/b.json", 2L), ("raw/sub/deep/c.json", 3L)))
+    assert(listed("raw/empty") === Set.empty)
+    assert(listed("raw/a.json") === Set(("raw/a.json", 1L))) // the prefix is a file
+    assert(listed("raw/missing") === Set.empty)
   }
 
   test("pipeline B: no filters → everything moves (incl. non-JSON)") {
