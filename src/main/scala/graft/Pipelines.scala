@@ -33,19 +33,14 @@ object Pipelines {
     */
   def pipelineA(spark: SparkSession, manifestCsv: String, lakeRoot: String,
                 sourcePrefix: String, targetPrefix: String,
-                mode: MoveSink.Mode = MoveSink.Copy, dryRun: Boolean = false,
-                fileIndex: Option[Dataset[graft.model.LakeFile]] = None)
+                mode: MoveSink.Mode = MoveSink.Copy, dryRun: Boolean = false)
       : (DataFrame, DataFrame, Option[Dataset[MoveResult]]) = {
     val root = lakeRoot.replaceAll("/+$", "")
     val manifest = Manifest.blobPaths(Manifest.read(spark, manifestCsv), sourcePrefix)
 
-    // listing restricted to the source prefix (partition-pruned scan),
-    // distributed across tasks — no driver-side file buffer. A persisted
-    // file-index table (Listing.readIndex) substitutes for the live walk
-    // at billion-file scale; the manifest semi-join below restricts it
-    // to the source prefix either way.
-    val listed = fileIndex
-      .getOrElse(Listing.listDistributed(spark, s"$root/$sourcePrefix"))
+    // listing restricted to the source prefix, distributed across
+    // tasks — no driver-side file buffer
+    val listed = Listing.listDistributed(spark, s"$root/$sourcePrefix")
       .select(regexp_replace(col("name"), "^" + java.util.regex.Pattern.quote(
         new org.apache.hadoop.fs.Path(root).toUri.getPath + "/"), "").as("path"))
 

@@ -7,8 +7,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [comma-separated query subset (dev only)]
     val sfDir = args(0); val outDir = args(1)
+    // checked before the session starts: a misspelled name fails here
+    // instead of silently writing nothing
     val subset: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+      args.lift(2).map(list => Explain.targets(Some(list)).toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -801,11 +801,10 @@ object Dedup {
   //
   // At 100 TB the index IS the asset: a daily-ingestion job must not
   // re-shingle and re-MinHash the historical corpus to check one new
-  // batch. Instead the corpus is indexed ONCE into three parquet tables
-  // (like Listing.writeIndex persists the file index), new batches
-  // append their slice, and near-dup checks equi-join the new batch's
-  // band keys against the TABLE — the historical text is never touched
-  // again. All three tables are mergeable by construction:
+  // batch. Instead the corpus is indexed ONCE into three parquet tables,
+  // new batches append their slice, and near-dup checks equi-join the
+  // new batch's band keys against the TABLE — the historical text is
+  // never touched again. All three tables are mergeable by construction:
   //   sets / bands : per-doc rows — merge = UNION (disjoint id spaces)
   //   dfs          : per-shingle counts — merge = UNION + groupBy-SUM
   // so index(A ∪ B) == merge(index(A), index(B)) row-for-row
@@ -852,9 +851,9 @@ object Dedup {
     BandIndex(sets, bands = banded, dfs = dfs)
   }
 
-  /** Persist an index as three parquet tables under `path`. Overwrite
-    * semantics like [[graft.sources.Listing.writeIndex]]: parquet is
-    * immutable, so incremental maintenance writes a NEW path and swaps.
+  /** Persist an index as three parquet tables under `path`, overwriting
+    * what is there: parquet is immutable, so incremental maintenance
+    * writes a NEW path and swaps.
     */
   def writeBandIndex(idx: BandIndex, path: String): Unit = {
     idx.sets.write.mode("overwrite").parquet(s"$path/sets")

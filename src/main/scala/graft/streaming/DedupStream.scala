@@ -19,7 +19,7 @@ import graft.operators.Dedup
   * Jaccard verification prunes LSH false positives. State is zero; the
   * per-batch cost is the candidate join only. The index is a plain
   * DataFrame: rebuild it offline and swap it in between restarts, or
-  * persist it via Listing.writeIndex-style parquet.
+  * persist it with [[graft.operators.Dedup.writeBandIndex]].
   */
 object DedupStream {
 

@@ -157,8 +157,7 @@ class CrawlStateSpec extends SparkSpec {
     assert(logSet(gone).map(_._1) ===
       Set("https://ex.org/p2", "https://ex.org/p3"))
     // round trip + stats histogram
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-fetchlog").toString
+    val root = TempDirs.dir("graft-fetchlog").toString
     CrawlState.writeFetchLog(merged, s"$root/log")
     assert(logSet(CrawlState.readFetchLog(spark, s"$root/log")) ===
       logSet(merged))
@@ -206,7 +205,7 @@ class CrawlStateSpec extends SparkSpec {
     assert(app.robots.collect().toSet === c.robots.collect().toSet)
     // round trip + TTL: at Feb-1 with ttl 48h, a.org (22 days) is
     // stale, b.org (12h) is fresh — and freshRobots serves only b
-    val root = Files.createTempDirectory("graft-robots").toString
+    val root = TempDirs.dir("graft-robots").toString
     CrawlState.writeRobotsCache(c, s"$root/cache")
     val rt = CrawlState.readRobotsCache(spark, s"$root/cache")
     val rep = CrawlState.staleRobots(rt, ts("2024-02-01 00:00:00"), 48L)
@@ -299,8 +298,7 @@ class CrawlStateSpec extends SparkSpec {
     def logSet(l: CrawlState.FetchLog): Set[(String, String)] =
       l.fetches.collect().map(r =>
         (r.getString(0), r.getTimestamp(1).toString)).toSet
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-fetchlog-cmp").toString
+    val root = TempDirs.dir("graft-fetchlog-cmp").toString
     val log = CrawlState.buildFetchLog(Seq(
       ("https://ex.org/p1", "2024-01-05 10:00:00"),
       ("https://ex.org/p2", "2024-01-12 09:00:00"),
@@ -333,7 +331,7 @@ class CrawlStateSpec extends SparkSpec {
   }
 
   test("parquet round trip + compact preserve the url set") {
-    val root = Files.createTempDirectory("graft-urlseen").toString
+    val root = TempDirs.dir("graft-urlseen").toString
     val idx = CrawlState.buildUrlIndex(
       (1 to 50).map(i => s"https://ex${i % 5}.org/d/$i").toDF("url"))
     CrawlState.writeUrlIndex(idx, s"$root/idx")
@@ -351,7 +349,7 @@ class CrawlStateSpec extends SparkSpec {
   test("streaming frontierScreen reads the persisted artifact's urls") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft-urlseen-s").toString
+    val root = TempDirs.dir("graft-urlseen-s").toString
     CrawlState.writeUrlIndex(CrawlState.buildUrlIndex(
       Seq("https://ex.org/seen/1").toDF("url")), s"$root/idx")
     val known = CrawlState.readUrlIndex(spark, s"$root/idx").urls

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.CrawlState
@@ -16,7 +14,7 @@ class CrawlWaveSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshArtifacts(seen: Seq[String]): String = {
-    val root = Files.createTempDirectory("graft-wave").toString
+    val root = TempDirs.dir("graft-wave").toString
     CrawlState.writeUrlIndex(
       CrawlState.buildUrlIndex(seen.toDF("url")), s"$root/frontier")
     CrawlState.writeFetchLog(

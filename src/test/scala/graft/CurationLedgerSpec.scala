@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.CurationLedger
@@ -17,7 +15,7 @@ class CurationLedgerSpec extends SparkSpec {
     rows.toDF("stage", "n")
 
   test("append accumulates runs; trend lags per stage; stats per run") {
-    val root = Files.createTempDirectory("graft-ledger").toString
+    val root = TempDirs.dir("graft-ledger").toString
     val p = s"$root/funnel"
     CurationLedger.append(spark, p, "day-0",
       report("ingested" -> 100L, "kept" -> 80L))
@@ -55,7 +53,7 @@ class CurationLedgerSpec extends SparkSpec {
     // adversarial caller-chosen ids: wave-10 sorts BEFORE wave-9
     // lexicographically — the ingest sequence (append order) must own
     // the trend's prev/delta, with run_id a label only
-    val root = Files.createTempDirectory("graft-ledger-seq").toString
+    val root = TempDirs.dir("graft-ledger-seq").toString
     val p = s"$root/funnel"
     CurationLedger.append(spark, p, "wave-9", report("kept" -> 10L))
     CurationLedger.append(spark, p, "wave-10", report("kept" -> 25L))
@@ -80,7 +78,7 @@ class CurationLedgerSpec extends SparkSpec {
     // with null seq, order among themselves by their run id with the
     // numeric suffix zero-padded (run-2 < run-10), and every
     // post-upgrade append lands AFTER them
-    val root = Files.createTempDirectory("graft-ledger-mig").toString
+    val root = TempDirs.dir("graft-ledger-mig").toString
     val p = s"$root/funnel"
     Seq(("run-2", "kept", 10L), ("run-10", "kept", 30L))
       .toDF("run_id", "stage", "n")

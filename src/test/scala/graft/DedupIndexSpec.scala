@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -53,7 +51,7 @@ class DedupIndexSpec extends SparkSpec {
   }
 
   test("write/read round trip preserves all three tables; compact too") {
-    val root = Files.createTempDirectory("graft-bandidx").toString
+    val root = TempDirs.dir("graft-bandidx").toString
     val idx = Dedup.buildBandIndex(corpus(corpusA ++ corpusB),
       "doc_id", "text", n = 3, bands = 3, rowsPerBand = 2)
     Dedup.writeBandIndex(idx, root)
@@ -74,14 +72,14 @@ class DedupIndexSpec extends SparkSpec {
   }
 
   test("daily-append shape: merge then persist equals one-shot rebuild") {
-    val root = Files.createTempDirectory("graft-bandidx-app").toString
+    val root = TempDirs.dir("graft-bandidx-app").toString
     val dayOne = Dedup.buildBandIndex(corpus(corpusA), "doc_id", "text", 3, 3, 2)
     Dedup.writeBandIndex(dayOne, root)
     // day two: merge the persisted index with the new batch's index,
     // write to a new path, swap (parquet is immutable)
     val merged = Dedup.mergeBandIndex(Dedup.readBandIndex(spark, root),
       Dedup.buildBandIndex(corpus(corpusB), "doc_id", "text", 3, 3, 2))
-    val next = Files.createTempDirectory("graft-bandidx-app2").toString
+    val next = TempDirs.dir("graft-bandidx-app2").toString
     Dedup.writeBandIndex(merged, next)
     val rebuilt = Dedup.buildBandIndex(corpus(corpusA ++ corpusB),
       "doc_id", "text", 3, 3, 2)
@@ -146,7 +144,7 @@ class DedupIndexSpec extends SparkSpec {
   test("streaming screen over the persisted index equals the batch check") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft-bandidx-str").toString
+    val root = TempDirs.dir("graft-bandidx-str").toString
     val base = corpus(corpusA ++ corpusB.filter(_._1 >= 20))
     Dedup.writeBandIndex(
       Dedup.buildBandIndex(base, "doc_id", "text", 3, 3, 2), root)

@@ -2,65 +2,17 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.Listing
-
-/** Persisted file-index table: round trip + drop-in use in pipeline A. */
+/** Scan-level robustness and approximation contracts: corrupt files
+  * under `ignoreCorruptFiles`, and approx sketches against exact
+  * answers. */
 class FileIndexSpec extends SparkSpec {
-
-  test("index round trip preserves the listing; pipelineA consumes it") {
-    val root = Files.createTempDirectory("graft-index")
-    val raw = root.resolve("raw"); Files.createDirectories(raw)
-    Files.writeString(raw.resolve("a.json"), """{"x":1}""")
-    Files.writeString(raw.resolve("b.json"), """{"x":2}""")
-    val csv = root.resolve("manifest.csv")
-    Files.writeString(csv,
-      """QuoteId;unixtimestamp;filename
-        |q1;1;a.json
-        |q2;1;missing.json
-        |""".stripMargin)
-
-    val live = Listing.listDistributed(spark, s"file:$root/raw")
-    val idxPath = s"file:$root/_index"
-    Listing.writeIndex(live, idxPath)
-    val idx = Listing.readIndex(spark, idxPath)
-    assert(idx.collect().map(f => (f.name.split("/").last, f.size)).sorted.toSeq
-      === Seq(("a.json", 7L), ("b.json", 7L)))
-
-    // the index substitutes for the live walk: same found/not-found
-    val (found, notFound, _) = Pipelines.pipelineA(
-      spark, csv.toString, s"file:$root", "raw/", "archive/",
-      dryRun = true, fileIndex = Some(idx))
-    assert(found.collect().map(_.getString(0)).toSeq === Seq("raw/a.json"))
-    assert(notFound.collect().map(_.getString(0)).toSeq === Seq("raw/missing.json"))
-  }
-
-  test("updateIndex: churned prefix refreshed, other prefixes untouched") {
-    val root = Files.createTempDirectory("graft-index-upd")
-    val raw = root.resolve("raw"); Files.createDirectories(raw)
-    val cold = root.resolve("cold"); Files.createDirectories(cold)
-    Files.writeString(raw.resolve("a.json"), "1234")
-    Files.writeString(raw.resolve("gone.json"), "12")
-    Files.writeString(cold.resolve("keep.json"), "123")
-    val idx0 = Listing.listDistributed(spark, s"file:$root")
-    // churn: one file deleted, one grown, one new — only under raw/
-    Files.delete(raw.resolve("gone.json"))
-    Files.writeString(raw.resolve("a.json"), "123456789")
-    Files.writeString(raw.resolve("new.json"), "12345")
-    val freshRaw = Listing.listDistributed(spark, s"file:$root/raw")
-    // scheme-qualified prefix — the natural call pattern; updateIndex
-    // must normalize it to the scheme-less names the index stores
-    val merged = Listing.updateIndex(idx0, freshRaw, s"file:$root/raw")
-      .collect().map(f => f.name.split("/").last -> f.size).toMap
-    assert(merged === Map(
-      "a.json" -> 9L, "new.json" -> 5L, "keep.json" -> 3L))
-  }
 
   test("corrupt file among good ones: ignoreCorruptFiles reads the rest") {
     // the poison-pill contract at the FILE level (e_corrupt_json covers
     // the record level): one truncated/garbage parquet inside a 100 TB
     // scan must cost its own rows only, never the 10-hour job
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-corrupt")
+    val root = TempDirs.dir("graft-corrupt")
     val dir = root.resolve("data")
     Seq(1L, 2L, 3L).toDF("v").write.parquet(s"file:$dir")
     Files.writeString(dir.resolve("part-junk.parquet"),

@@ -62,7 +62,7 @@ class GraphSpec extends SparkSpec {
 
   test("g_triangles: counts each triangle once, dedups edges, prunes by date") {
     import java.sql.Timestamp
-    val dir = java.nio.file.Files.createTempDirectory("tri").toString
+    val dir = TempDirs.dir("tri").toString
     val in = Timestamp.valueOf("1995-03-15 00:00:00")
     val out = Timestamp.valueOf("1995-06-01 00:00:00")
     // o1 {1,2,3} closes a triangle; o3 {1,2} duplicates edge 1-2;

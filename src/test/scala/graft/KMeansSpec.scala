@@ -68,7 +68,7 @@ class KMeansSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.01"
     val pts = Tables.t(spark, dir, "embeddings")
     val (assign, model) = KMeans.fit(pts, k = 8, dim = 64, iters = 5)
-    val path = java.nio.file.Files.createTempDirectory("km-model").toString
+    val path = TempDirs.dir("km-model").toString
     KMeans.writeModel(spark, path, model, assign)
     val (rt, stats) = KMeans.readModel(spark, path)
     assert(rt === model, "centroids must round-trip parquet bit-exactly")

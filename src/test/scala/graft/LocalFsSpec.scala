@@ -28,7 +28,7 @@ class LocalFsSpec extends SparkSpec {
   private def hp(p: JPath): Path = new Path(p.toUri)
 
   private def withDir[A](body: JPath => A): A = {
-    val dir = Files.createTempDirectory("graft-localfs")
+    val dir = TempDirs.dir("graft-localfs")
     try body(dir) finally FileUtil.fullyDelete(dir.toFile)
   }
 

@@ -33,7 +33,7 @@ class LogisticSpec extends SparkSpec {
     val w = Logistic.train(spark, feats, docs.count(),
       epochs = 2, lr = 0.5).last
     // artifact law: exact decimals round-trip parquet
-    val dir = java.nio.file.Files.createTempDirectory("qclf").toString
+    val dir = TempDirs.dir("qclf").toString
     Logistic.writeModel(spark, dir, w)
     assert(Logistic.readModel(spark, dir) === w)
     // deployment law: the per-row token fold equals the feature
@@ -172,7 +172,7 @@ class LogisticSpec extends SparkSpec {
     val w = Logistic.bucketSpace()
       .map(b => b -> BigDecimal(s"0.${b.head.toInt % 10}").setScale(6))
       .toMap
-    val dir = java.nio.file.Files.createTempDirectory("qtr").toString
+    val dir = TempDirs.dir("qtr").toString
     // full round trip: weights + space + threshold survive exactly
     val m = Logistic.Trained(w, Logistic.SpaceBigram,
       Some(BigDecimal("1.250000")))

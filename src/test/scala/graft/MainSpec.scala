@@ -48,7 +48,7 @@ class MainSpec extends SparkSpec {
   }
 
   test("run: pipelineB smoke over a temp lake — dry-run counts, then real move") {
-    val root = Files.createTempDirectory("graft-cli")
+    val root = TempDirs.dir("graft-cli")
     write(root, "raw/a.json", """{"SalesCompanyId":"12"}""")
     write(root, "raw/b.json", """{"SalesCompanyId":"99"}""")
     def cfg(dry: Boolean) = Main.parse(
@@ -71,7 +71,7 @@ class MainSpec extends SparkSpec {
   }
 
   test("run: pipelineA smoke — manifest drives the copy, statuses reported") {
-    val root = Files.createTempDirectory("graft-cli-a")
+    val root = TempDirs.dir("graft-cli-a")
     write(root, "raw/x.json", """{"QuoteId":"q1"}""")
     val csv = root.resolve("manifest.csv")
     Files.writeString(csv,
@@ -125,7 +125,7 @@ class MainSpec extends SparkSpec {
 
   test("curate --update-index: the daily loop — today's keepers screen tomorrow") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-curate-loop")
+    val root = TempDirs.dir("graft-curate-loop")
     val tA = "the quick brown fox jumps over the lazy dog again and again"
     val tB = "every bird sings while the green tree waves and water runs fast"
     val tC = "some people walk along this quiet road and watch the old town"
@@ -168,7 +168,7 @@ class MainSpec extends SparkSpec {
 
   test("curate --update-frontier: kept docs' outlinks enter the seen set") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-curate-fr")
+    val root = TempDirs.dir("graft-curate-fr")
     val good = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     // doc 1 keeps (its outlink must append); doc 2 fails quality (its
     // outlink must NOT)
@@ -196,7 +196,7 @@ class MainSpec extends SparkSpec {
 
   test("curate --ledger: each run's funnel appends under its run id") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-curate-led")
+    val root = TempDirs.dir("graft-curate-led")
     val good = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     Seq((1L, s"<p>$good one</p>"), (2L, "<p>tiny</p>"))
       .toDF("doc_id", "text").write.parquet(s"$root/in.parquet")
@@ -232,7 +232,7 @@ class MainSpec extends SparkSpec {
 
   test("curate --classifier: the persisted model gates keep from the CLI") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-curate-clf")
+    val root = TempDirs.dir("graft-curate-clf")
     val good = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     Seq((1L, s"<p>$good one</p>"), (2L, s"<p>$good two</p>"))
       .toDF("doc_id", "text").write.parquet(s"$root/in.parquet")
@@ -312,7 +312,7 @@ class MainSpec extends SparkSpec {
 
   test("index CLI: frontier lifecycle — build/append/check/erase/stats") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-frontier-cli")
+    val root = TempDirs.dir("graft-frontier-cli")
     (1 to 8).map(i => s"https://ex${i % 2}.org/d/$i").toDF("url")
       .write.parquet(s"$root/day0.parquet")
     def run(args: String*) =
@@ -353,7 +353,7 @@ class MainSpec extends SparkSpec {
 
   test("index CLI: fetchlog lifecycle — build/append/check/erase/stats") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-fetchlog-cli")
+    val root = TempDirs.dir("graft-fetchlog-cli")
     Seq(("https://ex.org/p1", "2024-01-10"), ("https://ex.org/p2", "2024-01-12"))
       .toDF("url", "fetched_at").write.parquet(s"$root/w0.parquet")
     Seq(("HTTPS://EX.ORG/p1?utm_x=1", "2024-01-20"), // refetch advances
@@ -410,7 +410,7 @@ class MainSpec extends SparkSpec {
 
   test("crawl CLI: pipeline D day-0/1/2 loop advances the artifacts") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-crawl-cli")
+    val root = TempDirs.dir("graft-crawl-cli")
     // persisted crawl state: one already-crawled page
     graft.operators.CrawlState.writeUrlIndex(
       graft.operators.CrawlState.buildUrlIndex(
@@ -502,7 +502,7 @@ class MainSpec extends SparkSpec {
 
   test("index CLI: robots lifecycle — build/append/check/stats/erase") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-robots-cli").toString
+    val root = TempDirs.dir("graft-robots-cli").toString
     Seq(("a.org", "User-agent: *\nDisallow: /x/\n", "2024-01-01 00:00:00"),
         ("b.org", "User-agent: *\nDisallow: /\n", "2024-01-30 00:00:00"))
       .toDF("host", "txt", "fetched_at")
@@ -553,7 +553,7 @@ class MainSpec extends SparkSpec {
 
   test("crawl CLI: --spool discovery day-0 chains into recrawl day-1") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-spool-cli").toString
+    val root = TempDirs.dir("graft-spool-cli").toString
     // fetched spool: one host, one sitemap declaring three pages —
     // p1 carries a lastmod AFTER day-0 (stale by day-1), p2 one far
     // in the past (fresh after day-0 fetch), p3 none (unknown)
@@ -636,7 +636,7 @@ class MainSpec extends SparkSpec {
   }
 
   test("model CLI: train/retrain/score/drift/eval lifecycle") {
-    val root = Files.createTempDirectory("graft-model-cli")
+    val root = TempDirs.dir("graft-model-cli")
     val sf = "/root/testdata/sf0.001/documents.parquet"
     def run(args: String*) =
       Main.runModel(spark, Main.parseModel(args.toSeq))
@@ -695,7 +695,7 @@ class MainSpec extends SparkSpec {
   }
 
   test("model CLI: threshold selection, feature-space record + guard") {
-    val root = Files.createTempDirectory("graft-model-thr")
+    val root = TempDirs.dir("graft-model-thr")
     val sf = "/root/testdata/sf0.001/documents.parquet"
     val L = graft.operators.Logistic
     def run(args: String*) =
@@ -752,7 +752,7 @@ class MainSpec extends SparkSpec {
 
   test("takedown: one command cascades the erase across all artifacts") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-takedown")
+    val root = TempDirs.dir("graft-takedown")
     // band index over 4 docs (2 to erase)
     val tA = "the quick brown fox jumps over the lazy dog again and again"
     val tB = "every bird sings while the green tree waves and water runs"
@@ -823,7 +823,7 @@ class MainSpec extends SparkSpec {
 
   test("index CLI: band lifecycle — build/append/stats/erase/compact/merge") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-idx-cli")
+    val root = TempDirs.dir("graft-idx-cli")
     def corpus(ids: Range, drop: Int): Unit =
       ids.map(i => (i.toLong, ("alpha beta gamma delta epsilon zeta " +
           s"eta theta iota kappa v$i").split(" ").drop(drop).mkString(" ")))
@@ -899,7 +899,7 @@ class MainSpec extends SparkSpec {
 
   test("index CLI: ivf lifecycle — build/append/stats/erase/compact") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-idx-ivf")
+    val root = TempDirs.dir("graft-idx-ivf")
     val rnd = new scala.util.Random(11)
     def vecs(ids: Range): Seq[(Long, Seq[Double])] =
       ids.map(i => (i.toLong, Seq.fill(8)(rnd.nextGaussian())))

@@ -9,7 +9,7 @@ import graft.operators.{Diff, Layout}
 class MaintenanceSpec extends SparkSpec {
 
   test("compact: many small files become targetFiles, data unchanged") {
-    val out = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val out = TempDirs.dir("graft_compact").toString
     try {
       // simulate a micro-batch sink's residue: 32 tiny files
       spark.range(0, 10000L).repartition(32)
@@ -31,7 +31,7 @@ class MaintenanceSpec extends SparkSpec {
 
   test("writeSharded: per-file row bound enforced, manifest sums to total") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_shard").toString + "/shards"
+    val out = TempDirs.dir("graft_shard").toString + "/shards"
     try {
       val df = (1L to 1000L).map(i => (i, s"doc$i")).toDF("id", "text")
       val manifest = graft.operators.Layout.writeSharded(df, out, rowsPerShard = 128)
@@ -44,113 +44,6 @@ class MaintenanceSpec extends SparkSpec {
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(out).getParentFile)
-    }
-  }
-
-  test("incremental HLL distinct: batched sketch merges track exact distinct") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_hll").toString + "/state"
-    try {
-      // overlapping user sets across batches — counts do NOT add, only
-      // the sketch union is correct
-      val all = (1L to 6000L).map(i => (s"d${i % 3}", i % 400)).toDF("day", "uid")
-      Seq(0L, 1L, 2L).foreach { b =>
-        graft.operators.IncrementalAgg.updateDistinct(spark, dir,
-          all.filter(col("uid") % 3 === b), Seq("day"), "uid")
-      }
-      val got = graft.operators.IncrementalAgg.readDistinct(spark, dir)
-        .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
-      val want = all.groupBy("day").agg(countDistinct(col("uid")).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(got.keySet === want.keySet)
-      // lgK=12 HLL is exact at these cardinalities (dense mode far off)
-      want.foreach { case (k, n) => assert(got(k) === n, s"$k: ${got(k)} vs $n") }
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(dir).getParentFile)
-    }
-  }
-
-  test("incremental aggregation: N batch updates == one-shot aggregate") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_incr").toString + "/state"
-    try {
-      val all = (1L to 3000L).map(i => (s"k${i % 7}", (i % 100) / 4.0)).toDF("k", "v")
-      // three arrival batches with different boundaries
-      graft.operators.IncrementalAgg.update(spark, dir,
-        all.filter(col("v") < 10), Seq("k"), "v")
-      graft.operators.IncrementalAgg.update(spark, dir,
-        all.filter(col("v") >= 10 && col("v") < 20), Seq("k"), "v")
-      graft.operators.IncrementalAgg.update(spark, dir,
-        all.filter(col("v") >= 20), Seq("k"), "v")
-      val got = graft.operators.IncrementalAgg.read(spark, dir)
-        .collect().map(r => r.getString(0) ->
-          (r.getLong(1), r.getDecimal(2).doubleValue, r.getDouble(3))).toMap
-      val want = all.groupBy("k").agg(count(lit(1)).as("cnt"),
-          sum(col("v").cast("decimal(18,2)")).cast("double").as("s"))
-        .collect().map(r => r.getString(0) ->
-          (r.getLong(1), r.getDouble(2))).toMap
-      assert(got.size === want.size)
-      want.foreach { case (k, (cnt, s)) =>
-        val (gc, gs, gavg) = got(k)
-        assert(gc === cnt && gs === s && gavg === s / cnt, k)
-      }
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(dir).getParentFile)
-    }
-  }
-
-  test("incremental aggregation fed by a stream (foreachBatch) == batch aggregate") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val dir = java.nio.file.Files.createTempDirectory("graft_sincr").toString + "/state"
-    try {
-      val mem = MemoryStream[(String, Double)]
-      mem.addData(("a", 1.5), ("b", 2.0), ("a", 3.25))
-      mem.addData(("b", 4.0), ("c", 0.25))
-      val q = mem.toDF().toDF("k", "v").writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          graft.operators.IncrementalAgg.update(spark, dir, batch, Seq("k"), "v")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      try q.awaitTermination(120000) finally q.stop()
-      val got = graft.operators.IncrementalAgg.read(spark, dir)
-        .collect().map(r => r.getString(0) ->
-          (r.getLong(1), r.getDecimal(2).doubleValue)).toMap
-      assert(got === Map("a" -> (2L, 4.75), "b" -> (2L, 6.0), "c" -> (1L, 0.25)))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(dir).getParentFile)
-    }
-  }
-
-  test("HLL distinct state fed by a stream (foreachBatch) tracks exact distinct") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val dir = java.nio.file.Files.createTempDirectory("graft_shll").toString + "/state"
-    try {
-      val mem = MemoryStream[(String, Long)]
-      mem.addData(("d1", 1L), ("d1", 2L), ("d2", 1L))
-      mem.addData(("d1", 2L), ("d1", 3L), ("d2", 1L)) // overlaps batch 1
-      val q = mem.toDF().toDF("day", "uid").writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          graft.operators.IncrementalAgg.updateDistinct(
-            spark, dir, batch, Seq("day"), "uid")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      try q.awaitTermination(120000) finally q.stop()
-      val got = graft.operators.IncrementalAgg.readDistinct(spark, dir)
-        .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
-      // sketch union across overlapping batches == distinct of the union
-      assert(got === Map("d1" -> 3L, "d2" -> 1L))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(dir).getParentFile)
     }
   }
 
@@ -239,7 +132,7 @@ class MaintenanceSpec extends SparkSpec {
     // a new column; existing files must stay readable with the new
     // column null — no rewrite, no failure
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("evolve").toString
+    val dir = TempDirs.dir("evolve").toString
     Seq((1L, "a"), (2L, "b")).toDF("id", "s")
       .write.mode("append").parquet(dir)
     Seq((3L, "c", 30.5)).toDF("id", "s", "score")

@@ -10,7 +10,7 @@ import graft.sources.Manifest
 class ManifestSpec extends SparkSpec {
 
   test("readCatalog: ;-CSV with header, fixed schema, null table names") {
-    val dir = Files.createTempDirectory("graft_catalog_spec")
+    val dir = TempDirs.dir("graft_catalog_spec")
     val f = dir.resolve("Results.csv")
     Files.writeString(f,
       """SourceSchema;SourceTableName;Source

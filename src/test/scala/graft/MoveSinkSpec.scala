@@ -7,7 +7,7 @@ import graft.operators.{MoveSink, Report}
 /** O6/O7 sink semantics: overwrite, error isolation, idempotent retry. */
 class MoveSinkSpec extends SparkSpec {
 
-  private def tmp(): JPath = Files.createTempDirectory("graft-sink")
+  private def tmp(): JPath = TempDirs.dir("graft-sink")
 
   private def planDf(pairs: (String, String)*) = {
     import spark.implicits._
@@ -109,16 +109,6 @@ class MoveSinkSpec extends SparkSpec {
       planDf((s"file:$root/gone.txt", s"file:$root/done.txt")),
       MoveSink.Move).collect()
     assert(res(0).ok && res(0).bytes === 1L)
-  }
-
-  test("O4 existsProbe: per-path distributed existence check") {
-    import spark.implicits._
-    val root = tmp()
-    Files.writeString(root.resolve("yes.txt"), "x")
-    val probed = graft.sources.Listing.existsProbe(
-      Seq(s"file:$root/yes.txt", s"file:$root/no.txt").toDF("path"))
-      .collect().map(r => r.getString(0).split("/").last -> r.getBoolean(1)).toMap
-    assert(probed === Map("yes.txt" -> true, "no.txt" -> false))
   }
 
   test("observe() metrics ride along with the action") {

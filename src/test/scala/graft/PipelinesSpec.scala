@@ -16,7 +16,7 @@ import graft.operators.MoveSink
 class PipelinesSpec extends SparkSpec {
 
   private def mkLake(): JPath = {
-    val root = Files.createTempDirectory("graft-lake")
+    val root = TempDirs.dir("graft-lake")
     Files.createDirectories(root.resolve("raw"))
     root
   }
@@ -34,30 +34,6 @@ class PipelinesSpec extends SparkSpec {
       .map(p => root.relativize(p).toString)
       .filterNot(_.split("/").last.startsWith("."))
       .toSet
-
-  test("storageReport: per-prefix counts, bytes, and newest mtime") {
-    val root = mkLake()
-    write(root, "raw/a/one.json", "12345")
-    write(root, "raw/a/two.json", "123")
-    write(root, "raw/b/three.json", "1234567")
-    val files = graft.sources.Listing.list(spark, root.toString)
-    val rootDepth = root.toString.split("/").count(_.nonEmpty)
-    val got = graft.sources.Listing.storageReport(files.toDF(), rootDepth + 2)
-      .collect()
-      .map(r => r.getString(0).split("/").takeRight(2).mkString("/") ->
-        (r.getLong(1), r.getLong(2))).toMap
-    assert(got === Map("raw/a" -> ((2L, 8L)), "raw/b" -> ((1L, 7L))))
-    // a file SHALLOWER than depth rolls into its parent directory —
-    // its filename never becomes a phantom directory group
-    write(root, "raw/shallow.json", "12")
-    val again = graft.sources.Listing.storageReport(
-        graft.sources.Listing.list(spark, root.toString).toDF(),
-        rootDepth + 2)
-      .collect()
-      .map(r => r.getString(0).split("/").last -> r.getLong(1)).toMap
-    assert(again("raw") === 1L)
-    assert(!again.contains("shallow.json"))
-  }
 
   test("pipeline A: manifest semi/anti join, copy retains source, O11 rewrite") {
     val root = mkLake()
@@ -166,7 +142,7 @@ class PipelinesSpec extends SparkSpec {
 
   test("pipeline C: curation chain strips, repairs, screens, writes kept") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-curate")
+    val root = TempDirs.dir("graft-curate")
     val moji = new String("café".getBytes(
         java.nio.charset.StandardCharsets.UTF_8),
       java.nio.charset.StandardCharsets.ISO_8859_1)

@@ -206,7 +206,7 @@ class PlanSpec extends SparkSpec {
   test("partitioned layout: a partition-column filter prunes at planning time") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val out = TempDirs.dir("graft_part").toString
     try {
       val ev = Tables.t(spark, dir, "events")
         .withColumn("event_date", col("ts").cast("date"))

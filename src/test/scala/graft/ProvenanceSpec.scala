@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.Provenance
@@ -14,7 +12,7 @@ class ProvenanceSpec extends SparkSpec {
   import spark.implicits._
 
   test("append/read round trip; influences counts + remedy mapping") {
-    val root = Files.createTempDirectory("graft-prov").toString
+    val root = TempDirs.dir("graft-prov").toString
     val p = s"$root/prov"
     Provenance.append(spark, p, "band/a", "band",
       (1L to 10L).toDF("doc_id"))
@@ -41,7 +39,7 @@ class ProvenanceSpec extends SparkSpec {
   }
 
   test("takedown --provenance: impact report before/with the cascade") {
-    val root = Files.createTempDirectory("graft-prov-td").toString
+    val root = TempDirs.dir("graft-prov-td").toString
     Provenance.append(spark, s"$root/prov", "clf/q", "model",
       (1L to 4L).toDF("doc_id"))
     Provenance.append(spark, s"$root/prov", "band/b", "band",

@@ -14,7 +14,7 @@ class RobustnessSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    TempDirs.dir(prefix).toString
 
   test("corrupt parquet file: default read fails loudly, ignoreCorruptFiles skips it") {
     val root = tmpDir("graft-corrupt")

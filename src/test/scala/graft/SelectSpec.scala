@@ -58,7 +58,7 @@ class SelectSpec extends SparkSpec {
 
   test("listing carries creation_time: null on local FS, populated when the FileStatus exposes it") {
     import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-    val root = java.nio.file.Files.createTempDirectory("graft-ct")
+    val root = TempDirs.dir("graft-ct")
     java.nio.file.Files.writeString(root.resolve("a.txt"), "x")
     val listed = graft.sources.Listing.list(spark, s"file:$root").collect()
     assert(listed.length === 1)
@@ -85,7 +85,7 @@ class SelectSpec extends SparkSpec {
     // (reference semantics app/main.py:120-124)
     spark.sparkContext.hadoopConfiguration
       .set("fs.mockct.impl", classOf[CreationTimeFs].getName)
-    val root = java.nio.file.Files.createTempDirectory("graft-ctfs")
+    val root = TempDirs.dir("graft-ctfs")
     java.nio.file.Files.writeString(root.resolve("q.json"), "{}")
     try {
       val cloud = graft.sources.Listing.list(spark, s"mockct:$root")

@@ -550,7 +550,7 @@ class SimilaritySpec extends SparkSpec {
   }
   test("s_embed_outliers: planted scale-blowup vector ranks first") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("eo").toString
+    val dir = TempDirs.dir("eo").toString
     val normal = (0L until 40L).map(i =>
       (i, Array.fill(64)(((i % 7).toFloat - 3f) / 10f), 0))
     val outlier = Seq((99L, Array.fill(64)(25.0f), 0))
@@ -586,7 +586,7 @@ class SimilaritySpec extends SparkSpec {
       graft.operators.Similarity.buildIvfIndex(df(a), cents), df(b))
     assert(listRows(grown) === listRows(whole))
     // round trip + search equals the direct explicit-centroid path
-    val root = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val root = TempDirs.dir("graft-ivf").toString
     graft.operators.Similarity.writeIvfIndex(whole, root, partitions = 2)
     val rt = graft.operators.Similarity.readIvfIndex(spark, root)
     assert(listRows(rt) === listRows(whole))

@@ -195,7 +195,7 @@ class SitemapsSpec extends SparkSpec {
   }
 
   test("expand: nested index resolves to leaves; depth bound holds") {
-    val root = Files.createTempDirectory("graft-sm").toString
+    val root = TempDirs.dir("graft-sm").toString
     val host = Files.createDirectories(
       java.nio.file.Paths.get(root, "ex.org"))
     def write(name: String, text: String): Unit =
@@ -232,7 +232,7 @@ class SitemapsSpec extends SparkSpec {
   }
 
   test("expand: hostile cycle + diamond open each payload once; exact output") {
-    val root = Files.createTempDirectory("graft-sm-cyc").toString
+    val root = TempDirs.dir("graft-sm-cyc").toString
     val host = Files.createDirectories(
       java.nio.file.Paths.get(root, "ex.org"))
     def write(name: String, text: String): Unit =
@@ -322,7 +322,7 @@ class SitemapsSpec extends SparkSpec {
   }
 
   test("expand: same basename in different directories resolves by path") {
-    val root = Files.createTempDirectory("graft-sm-path").toString
+    val root = TempDirs.dir("graft-sm-path").toString
     val host = java.nio.file.Paths.get(root, "ex.org")
     Files.createDirectories(host.resolve("news"))
     Files.createDirectories(host.resolve("blog"))

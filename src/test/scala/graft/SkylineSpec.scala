@@ -7,7 +7,7 @@ class SkylineSpec extends SparkSpec {
   import spark.implicits._
 
   private def frontier(parts: Seq[(Long, Double, Int)]): Set[Long] = {
-    val dir = java.nio.file.Files.createTempDirectory("sky").toString
+    val dir = TempDirs.dir("sky").toString
     parts.toDF("p_partkey", "p_retailprice", "p_size")
       .write.parquet(s"$dir/part.parquet")
     SparkEntry.queries("q_skyline")(spark, dir)

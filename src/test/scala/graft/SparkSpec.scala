@@ -19,7 +19,7 @@ object SparkSpec {
       // bucketed-table tests use saveAsTable — keep the warehouse out
       // of the repo working directory
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+        TempDirs.dir("graft-warehouse").toString)
     Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")

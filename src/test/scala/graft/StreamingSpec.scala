@@ -3,60 +3,17 @@ package graft
 import java.nio.file.{Files, Path => JPath}
 import java.sql.Timestamp
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{array_distinct, broadcast, col, concat_ws, count, date_trunc, expr, first, lit, max, posexplode, struct, when}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import graft.streaming.{Archive, EventStreams}
+import graft.streaming.EventStreams
 
 class StreamingSpec extends SparkSpec {
 
-  private val docSchema = StructType(Seq(
-    StructField("QuoteId", StringType),
-    StructField("SalesCompanyId", StringType)))
-
-  test("file-stream archive: processed sources relocated to archive dir") {
-    val root = Files.createTempDirectory("graft-stream")
-    val src = root.resolve("raw"); Files.createDirectories(src)
-    val out = root.resolve("out"); val chk = root.resolve("chk")
-    val arch = root.resolve("archived")
-    Files.writeString(src.resolve("a.json"), """{"QuoteId":"q1","SalesCompanyId":"12"}""")
-    Files.writeString(src.resolve("b.json"), """{"QuoteId":"q2","SalesCompanyId":"99"}""")
-
-    val stream = Archive.readJsonStream(spark, s"file:$src", docSchema,
-      archiveDir = Some(s"file:$arch"))
-    // keep the query alive while polling: source-file archiving is done by
-    // an async cleaner owned by the running query
-    val q = Archive.toParquet(stream, s"file:$out", s"file:$chk")
-      .trigger(Trigger.ProcessingTime("500 milliseconds")).start()
-    try {
-      q.processAllAvailable()
-      val rows = spark.read.parquet(s"file:$out").collect()
-      assert(rows.map(_.getString(0)).toSet === Set("q1", "q2"))
-      // completed files are archived when the NEXT batch starts — feed one
-      // more file to advance the source, then poll the async cleaner
-      Files.writeString(src.resolve("c.json"),
-        """{"QuoteId":"q3","SalesCompanyId":"12"}""")
-      q.processAllAvailable()
-      def archived(): Long =
-        if (Files.exists(arch)) Files.walk(arch).iterator().asScala
-          .count(p => Files.isRegularFile(p) && p.toString.endsWith(".json"))
-        else 0
-      val deadline = System.currentTimeMillis() + 60000
-      while (archived() < 2 && System.currentTimeMillis() < deadline)
-        Thread.sleep(250)
-      assert(archived() >= 2)
-      // the first batch's sources are gone from the source dir
-      val left = Files.list(src).iterator().asScala.map(_.getFileName.toString).toSet
-      assert(!left.contains("a.json") && !left.contains("b.json"))
-    } finally q.stop()
-  }
-
   test("streaming pipeline B: continuous selective move with durable report") {
-    val root = Files.createTempDirectory("graft-bstream")
+    val root = TempDirs.dir("graft-bstream")
     val raw = root.resolve("raw"); Files.createDirectories(raw)
     Files.writeString(raw.resolve("keep.json"), """{"SalesCompanyId":"12"}""")
     Files.writeString(raw.resolve("skip.json"), """{"SalesCompanyId":"99"}""")
@@ -90,7 +47,7 @@ class StreamingSpec extends SparkSpec {
     // Exactly-once across process restarts is the property a 100 TB
     // incremental ingest leans on: the dedup state lives in the
     // checkpoint, not the process.
-    val root = Files.createTempDirectory("graft-staterec")
+    val root = TempDirs.dir("graft-staterec")
     val in = root.resolve("in"); Files.createDirectories(in)
     val schema = StructType(Seq(StructField("id", LongType)))
     def drain(): Unit = {
@@ -162,7 +119,7 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getTimestamp(0).getTime, r.getString(1),
         r.getLong(2), r.getDouble(3))).toSet
     // batch oracle: the e_hopping_window query over the same rows
-    val dir = Files.createTempDirectory("hopeq").toString
+    val dir = TempDirs.dir("hopeq").toString
     events.map(e => (e.event_id,
         e.ts.getTime * 1000000L, e.user_id, e.event_type, e.value, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -1092,8 +1049,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming curateAndLedger: per-micro-batch funnel in the ledger") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-stream-led").toString
+    val root = TempDirs.dir("graft-stream-led").toString
     val good = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val wave1 = Seq((1L, s"<p>$good one</p>"), (2L, "<p>tiny</p>"))
     val wave2 = Seq((3L, s"<p>$good three</p>"))
@@ -1134,8 +1090,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming crawlWaveBatch: micro-batches chain like daily waves") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-stream-crawl").toString
+    val root = TempDirs.dir("graft-stream-crawl").toString
     graft.operators.CrawlState.writeUrlIndex(
       graft.operators.CrawlState.buildUrlIndex(
         Seq("https://a.org/p1").toDF("url")), s"$root/frontier")
@@ -1524,70 +1479,6 @@ class StreamingSpec extends SparkSpec {
     assert(rollupNow().toSeq === want.toSeq)
   }
 
-  test("cusum stream: fit-offline/monitor-online is bit-equal to the batch screen") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    // batch = the retrospective screen; its global-mean target is the
-    // "fit offline" half the stream consumes as a constant
-    val batch = SparkEntry.queries("e_cusum_changepoint")(spark, dir)
-      .orderBy("h").collect()
-      .map(r => (r.getTimestamp(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getInt(5)))
-    val total = batch.map(_._2).sum
-    val target = total * 1000000L / batch.length
-    val hours = batch.map(r => (r._1, r._2))
-    val mem = MemoryStream[(Timestamp, Long)]
-    val out = graft.streaming.SignalStreams.cusumStream(
-      mem.toDF().toDF("h", "x"), target)
-    val q = out.writeStream.format("memory").queryName("cusumstream")
-      .outputMode("append").start()
-    try {
-      // three micro-batches, in order (append-mode window emission)
-      hours.grouped(hours.length / 3 + 1).foreach { chunk =>
-        mem.addData(chunk.toSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val got = spark.sql("SELECT * FROM cusumstream").collect()
-      .map(r => (r.getTimestamp(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getInt(5)))
-      .sortBy(_._1.getTime)
-    assert(got.toSeq === batch.toSeq,
-      "streamed CUSUM must be bit-identical to the batch closed form")
-  }
-
-  test("sprt stream: sequential A/B monitor is bit-equal to the batch readout") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val batch = SparkEntry.queries("e_sprt_ab")(spark, dir)
-      .orderBy("variant", "day").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getString(5)))
-    // the stream consumes the same daily trial buckets and the same
-    // inlined ln literals (fit offline, monitor online)
-    val lS = math.round(math.log(0.10 / 0.05) * 1e6)
-    val lF = math.round(math.log(0.90 / 0.95) * 1e6)
-    val bA = math.round(math.log(0.95 / 0.05) * 1e6)
-    val days = batch.map(r => (r._1, r._2, r._3, r._4))
-    val mem = MemoryStream[(Long, String, Long, Long)]
-    val out = graft.streaming.SignalStreams.sprtStream(
-      mem.toDF().toDF("variant", "day", "nTrials", "nSucc"), lS, lF, bA)
-    val q = out.writeStream.format("memory").queryName("sprtstream")
-      .outputMode("append").start()
-    try {
-      // per-variant in-order delivery across three micro-batches
-      days.sortBy(r => (r._2, r._1)).grouped(days.length / 3 + 1)
-        .foreach { chunk => mem.addData(chunk.toSeq); q.processAllAvailable() }
-    } finally q.stop()
-    val got = spark.sql("SELECT * FROM sprtstream").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getString(5)))
-      .sortBy(r => (r._1, r._2))
-    assert(got.toSeq === batch.toSeq,
-      "streamed SPRT must be bit-identical to the batch window")
-  }
-
   test("keyword screen: streaming blocklist hits equal the batch operator") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -1616,89 +1507,6 @@ class StreamingSpec extends SparkSpec {
       .sortBy(r => (r._1, r._2))
     assert(got.toSeq === want.toSeq,
       "stateless screen must be bit-identical batch vs stream")
-  }
-
-  test("psi stream: reference-frame monitor is bit-equal to the batch drift query") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.SignalStreams.PsiRef
-    val dir = "/root/testdata/sf0.001"
-    val cut = Timestamp.valueOf("2024-01-16 00:00:00")
-    val ev = Tables.t(spark, dir, "events")
-      .selectExpr("event_type", "value", "ts").collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getTimestamp(2)))
-    // fit offline: the reference half's bucket frame + counts,
-    // replicating the batch bucketing formula exactly
-    val refHalf = ev.filter(_._3.before(cut))
-    val ref: Seq[PsiRef] = refHalf.groupBy(_._1).toSeq.flatMap {
-      case (et, rows) =>
-        val lo = rows.map(_._2).min; val hi = rows.map(_._2).max
-        val counts = rows.groupBy { r =>
-          math.min(9L, math.max(0L,
-            math.floor((r._2 - lo) / ((hi - lo) / 10.0)).toLong))
-        }.map { case (b, rs) => b -> rs.length.toLong }
-        (0L to 9L).map(b =>
-          PsiRef(et, b, lo, hi, rows.length.toLong,
-            counts.getOrElse(b, 0L)))
-    }
-    val mem = MemoryStream[(String, Double)]
-    val ledger = graft.streaming.SignalStreams.psiLedger(
-      mem.toDF().toDF("et", "v"), ref)
-    val q = ledger.writeStream.format("memory").queryName("psiledger")
-      .outputMode("complete").start()
-    val cur = ev.filterNot(_._3.before(cut)).map(r => (r._1, r._2))
-    try {
-      cur.grouped(cur.length / 3 + 1).foreach { chunk =>
-        mem.addData(chunk.toSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val got = graft.streaming.SignalStreams.psiRollup(
-      spark.table("psiledger"), ref).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3))).sortBy(_._1)
-    val want = SparkEntry.queries("q_psi_drift")(spark, dir).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3))).sortBy(_._1)
-    assert(got.toSeq === want.toSeq,
-      "streamed PSI monitor must be bit-identical to the batch query")
-  }
-
-  test("holt stream: keyed (l,b) state fold is bit-equal to the batch fit") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val want = SparkEntry.queries("e_holt_linear")(spark, dir)
-      .collect()
-      .map(r => (r.getString(0), r.getTimestamp(1), r.getLong(2),
-        r.getDouble(3), r.getDouble(4),
-        if (r.isNullAt(5)) None else Some(r.getDouble(5))))
-      .sortBy(t => (t._1, t._2.getTime))
-    // the same hourly buckets, delivered in event-time order across
-    // four micro-batches
-    val hourly = Tables.t(spark, dir, "events")
-      .selectExpr("event_type AS et", "date_trunc('hour', ts) AS h")
-      .groupBy("et", "h").count().withColumnRenamed("count", "x")
-      .orderBy("h").collect()
-      .map(r => (r.getString(0), r.getTimestamp(1), r.getLong(2)))
-    val mem = MemoryStream[(String, Timestamp, Long)]
-    val out = graft.streaming.SignalStreams.holtStream(
-      mem.toDF().toDF("et", "h", "x"))
-    val q = out.writeStream.format("memory").queryName("holtstream")
-      .outputMode("append").start()
-    try {
-      hourly.grouped(hourly.length / 4 + 1).foreach { chunk =>
-        mem.addData(chunk.toSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val got = spark.sql(
-      "SELECT event_type, h, x, ROUND(level, 6), ROUND(trend, 6)," +
-        " ROUND(fcst, 6) FROM holtstream").collect()
-      .map(r => (r.getString(0), r.getTimestamp(1), r.getLong(2),
-        r.getDouble(3), r.getDouble(4),
-        if (r.isNullAt(5)) None else Some(r.getDouble(5))))
-      .sortBy(t => (t._1, t._2.getTime))
-    assert(got.toSeq === want.toSeq,
-      "streamed Holt must be bit-identical to the batch fit")
   }
 
   test("watermark drop parity: streaming dedup drops e_late_arrivals' replay set") {
@@ -1744,104 +1552,6 @@ class StreamingSpec extends SparkSpec {
       "jittered fixture must actually drop something")
     assert(droppedStream == droppedReplay.toSet,
       s"stream dropped ${droppedStream.size}, replay ${droppedReplay.size}")
-  }
-  test("w1 stream: ledger + rollup is bit-identical to q_wasserstein_1d") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    // fit offline: the corpus length-bucket profile is the reference
-    val docs = Tables.t(spark, dir, "documents")
-      .select(org.apache.spark.sql.functions.col("source"),
-        graft.functions.Text.tokenCount(
-          org.apache.spark.sql.functions.col("text")).cast("long").as("tc"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val buckets = docs.map(d => math.min(d._2 / 20, 9L))
-    val prof = buckets.groupBy(identity)
-      .map { case (b, v) => b -> v.length.toLong }
-    val ref = (0L to 9L).map(b =>
-      graft.streaming.SignalStreams.W1Ref(b, docs.length.toLong,
-        prof.getOrElse(b, 0L)))
-    // monitor online: the same docs stream in over 3 micro-batches
-    val mem = MemoryStream[(String, Long)]
-    val ledger = graft.streaming.SignalStreams.w1Ledger(
-      mem.toDF().toDF("source", "tc"))
-    val q = ledger.writeStream.format("memory").queryName("w1ledger")
-      .outputMode("complete").start()
-    try {
-      docs.grouped(docs.length / 3 + 1).foreach { chunk =>
-        mem.addData(chunk.toSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val got = graft.streaming.SignalStreams.w1Rollup(
-      spark.table("w1ledger"), ref).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    val want = SparkEntry.queries("q_wasserstein_1d")(spark, dir)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    assert(got.toSeq === want.toSeq,
-      "streamed W1 monitor must be bit-identical to the batch query")
-  }
-  test("fano stream: ledger + rollup is bit-identical to e_burstiness") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val evs = Tables.t(spark, dir, "events")
-      .selectExpr("event_type", "ts").collect()
-      .map(r => (r.getString(0), r.getTimestamp(1)))
-    val hours = evs.map(e => e._2.getTime / 3600000L)
-    val mem = MemoryStream[(String, Timestamp)]
-    val ledger = graft.streaming.SignalStreams.fanoLedger(
-      mem.toDF().toDF("event_type", "ts"))
-    val q = ledger.writeStream.format("memory").queryName("fanoledger")
-      .outputMode("complete").start()
-    try {
-      evs.grouped(evs.length / 3 + 1).foreach { chunk =>
-        mem.addData(chunk.toSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val got = graft.streaming.SignalStreams.fanoRollup(
-      spark.table("fanoledger"), hours.min, hours.max).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).sortBy(_._1)
-    val want = SparkEntry.queries("e_burstiness")(spark, dir).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).sortBy(_._1)
-    assert(got.toSeq === want.toSeq,
-      "streamed Fano monitor must be bit-identical to the batch query")
-  }
-  test("burn stream: trailing-window fold is bit-identical to e_slo_burn") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val hourly = Tables.t(spark, dir, "events")
-      .selectExpr("unix_micros(date_trunc('hour', ts)) div 3600000000 AS he",
-        "event_type = 'error' AS e")
-      .groupBy("he").agg(
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("nEvents"),
-        org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.expr(
-            "CASE WHEN e THEN 1 ELSE 0 END")).as("nErrors"))
-      .orderBy("he").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val mem = MemoryStream[(Long, Long, Long)]
-    val out = graft.streaming.SignalStreams.burnStream(
-      mem.toDF().toDF("he", "nEvents", "nErrors"))
-    val q = out.writeStream.format("memory").queryName("burnstream")
-      .outputMode("append").start()
-    try {
-      hourly.grouped(hourly.length / 4 + 1).foreach { chunk =>
-        mem.addData(chunk.toSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val got = spark.table("burnstream").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5), r.getBoolean(6))).sortBy(_._1)
-    val want = SparkEntry.queries("e_slo_burn")(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5), r.getBoolean(6))).sortBy(_._1)
-    assert(got.toSeq === want.toSeq,
-      "streamed burn monitor must be bit-identical to the batch query")
   }
   test("markov stream: per-user pair fold + rollup is bit-identical to batch") {
     import spark.implicits._

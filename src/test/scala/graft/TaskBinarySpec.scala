@@ -39,10 +39,10 @@ class TaskBinarySpec extends SparkSpec {
     seen.toSeq
   }
 
-  test("MoveSink.run, listDistributed and existsProbe tasks carry no Configuration") {
+  test("MoveSink.run and listDistributed tasks carry no Configuration") {
     import spark.implicits._
     // the RDDs are serialized, never run: only the listing reads the lake
-    val root = Files.createTempDirectory("graft-taskbinary")
+    val root = TempDirs.dir("graft-taskbinary")
     val rdds = try {
       Files.createDirectories(root.resolve("sub"))
       Files.writeString(root.resolve("sub/a.txt"), "A")
@@ -50,8 +50,7 @@ class TaskBinarySpec extends SparkSpec {
       val plan = Seq((s"file:$root/b.txt", s"file:$root/out/b.txt")).toDF("src", "dst")
       Map(
         "MoveSink.run" -> MoveSink.run(plan, MoveSink.Copy).rdd,
-        "listDistributed" -> Listing.listDistributed(spark, s"file:$root").rdd,
-        "existsProbe" -> Listing.existsProbe(Seq(s"file:$root/b.txt").toDF("path")).rdd)
+        "listDistributed" -> Listing.listDistributed(spark, s"file:$root").rdd)
     } finally FileUtil.fullyDelete(root.toFile)
     val carrying = rdds.map { case (name, rdd) => name -> configurationsIn(rdd) }
       .filter(_._2.nonEmpty)

@@ -43,7 +43,7 @@ class TextSpec extends SparkSpec {
     // LM over the whole corpus: "a b" occurs twice under w1=a alongside
     // "a c" once -> p(b|a)=2/3, p(c|a)=1/3; "b a" and "c a" are the sole
     // continuations of their w1 -> p=1 (nll 0).
-    val dir = java.nio.file.Files.createTempDirectory("tp").toString
+    val dir = TempDirs.dir("tp").toString
     import spark.implicits._
     Seq((1L, "a b a c"), (2L, "a b"), (3L, "solo"))
       .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
@@ -62,7 +62,7 @@ class TextSpec extends SparkSpec {
   }
 
   test("t_segment_dedup: repeated segment survives only in first doc") {
-    val dir = java.nio.file.Files.createTempDirectory("sd").toString
+    val dir = TempDirs.dir("sd").toString
     import spark.implicits._
     val seg = (1 to 10).map(i => s"w$i").mkString(" ") // one full segment
     Seq((1L, s"$seg tail one"), (2L, s"$seg other end"), (3L, "unique words"))
@@ -79,7 +79,7 @@ class TextSpec extends SparkSpec {
   }
 
   test("t_vocab_coverage: cumulative share strictly increases to the full-vocab total") {
-    val dir = java.nio.file.Files.createTempDirectory("vc").toString
+    val dir = TempDirs.dir("vc").toString
     import spark.implicits._
     Seq((1L, "a a a b b c"), (2L, "a b d"))
       .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
@@ -111,7 +111,7 @@ class TextSpec extends SparkSpec {
   }
 
   test("t_kneser_ney: P_KN sums to 1 per context over the full vocabulary") {
-    val dir = java.nio.file.Files.createTempDirectory("kn").toString
+    val dir = TempDirs.dir("kn").toString
     import spark.implicits._
     // small corpus, few enough bigram types that LIMIT 50 keeps all
     Seq((1L, "a b a c a b d"), (2L, "b a b c d a"), (3L, "c a a b"))
@@ -138,7 +138,7 @@ class TextSpec extends SparkSpec {
   }
 
   test("t_boilerplate_scrub: per-source threshold removes ALL occurrences") {
-    val dir = java.nio.file.Files.createTempDirectory("bp").toString
+    val dir = TempDirs.dir("bp").toString
     import spark.implicits._
     val seg = (1 to 10).map(i => s"x$i").mkString(" ")
     Seq((1L, "A", s"$seg tail one"), (2L, "A", s"$seg other end"),
@@ -554,7 +554,7 @@ class TextSpec extends SparkSpec {
   }
 
   test("t_mix_waterfall: naive iterative fixpoint replay, budget exact") {
-    val dir = java.nio.file.Files.createTempDirectory("wf").toString
+    val dir = TempDirs.dir("wf").toString
     import spark.implicits._
     // crafted so at least one source caps (tiny size, high weight) and
     // several stay uncapped; weights derive from len(source) % 3 + 1
@@ -612,7 +612,7 @@ class TextSpec extends SparkSpec {
   }
 
   test("t_tokenizer_eval: weighted-fertility identities on a controlled corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("tke").toString
+    val dir = TempDirs.dir("tke").toString
     import spark.implicits._
     val docs = Seq((1L, "the quick brown fox the fox"),
       (2L, "riverriverrun there then riverriverrun"))
@@ -638,7 +638,7 @@ class TextSpec extends SparkSpec {
   }
 
   test("t_unigram_viterbi: naive DP replay on a controlled corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("uni").toString
+    val dir = TempDirs.dir("uni").toString
     import spark.implicits._
     val docs = Seq((1L, "thethe the river there then the"),
       (2L, "rivers run there and then run the river"),
@@ -713,7 +713,7 @@ class TextSpec extends SparkSpec {
   }
 
   test("t_split_by_cluster: families land whole; id-split would leak") {
-    val dir = java.nio.file.Files.createTempDirectory("spl").toString
+    val dir = TempDirs.dir("spl").toString
     import spark.implicits._
     // 40 families of 3 exact copies each
     val docs = (0L until 40L).flatMap(f => Seq(0L, 1L, 2L).map(c =>
@@ -738,7 +738,7 @@ class TextSpec extends SparkSpec {
   }
 
   test("t_char_entropy: naive Shannon replay; spam low, varied high") {
-    val dir = java.nio.file.Files.createTempDirectory("ent").toString
+    val dir = TempDirs.dir("ent").toString
     import spark.implicits._
     val docs = Seq((1L, "aaaaaaaaaaaaaaaa"),          // 1 symbol: H = 0
       (2L, "abcdefghijklmnop"),                        // uniform 16: ln 16
@@ -772,7 +772,7 @@ class TextSpec extends SparkSpec {
   }
 
   test("t_unigram_prune: survivors = chars + top-160 by ec; renorm exact") {
-    val dir = java.nio.file.Files.createTempDirectory("uniprune").toString
+    val dir = TempDirs.dir("uniprune").toString
     import spark.implicits._
     Seq((1L, "thethe the river there then the"),
       (2L, "rivers run there and then run the river"),
@@ -823,7 +823,7 @@ class TextSpec extends SparkSpec {
   }
 
   test("t_script_census: counts replay Character.UnicodeScript exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("scripts").toString
+    val dir = TempDirs.dir("scripts").toString
     import spark.implicits._
     val docs = Seq((0L, "mixed ascii"), (1L, "plain words"),
       (2L, "the end"), (3L, "a"), (4L, "bb cc"), (5L, "zz"))
@@ -855,7 +855,7 @@ class TextSpec extends SparkSpec {
   }
 
   test("t_unigram_em: naive forward-backward replay; likelihood rises") {
-    val dir = java.nio.file.Files.createTempDirectory("uniem").toString
+    val dir = TempDirs.dir("uniem").toString
     import spark.implicits._
     val docs = Seq((1L, "thethe the river there then the"),
       (2L, "rivers run there and then run the river"),

@@ -35,7 +35,7 @@ class TimeSeriesSpec extends SparkSpec {
   }
 
   test("e_ema: hand-computed fixed-point fold in event-time order") {
-    val dir = java.nio.file.Files.createTempDirectory("ema").toString
+    val dir = TempDirs.dir("ema").toString
     import spark.implicits._
     // events fixture stores ts as INT64 nanos (driver layout); values
     // 1,2,3 arrive in ts order but are written shuffled to prove the
@@ -56,7 +56,7 @@ class TimeSeriesSpec extends SparkSpec {
   }
 
   test("e_scd2_intervals: run compression, chained validity, open current row") {
-    val dir = java.nio.file.Files.createTempDirectory("scd2").toString
+    val dir = TempDirs.dir("scd2").toString
     import spark.implicits._
     val h = 3600L * 1000000000L
     // user 1: a,a,b,a — the repeated 'a' compresses away; user 2: one row
@@ -79,7 +79,7 @@ class TimeSeriesSpec extends SparkSpec {
   }
 
   test("e_hopping_window: each event lands in exactly 4 sliding windows") {
-    val dir = java.nio.file.Files.createTempDirectory("hop").toString
+    val dir = TempDirs.dir("hop").toString
     import spark.implicits._
     val h = 3600L * 1000000000L
     // one event at 01:10 — covered by the 1-hour windows that start at

@@ -15,7 +15,7 @@ class TokenizerSpec extends SparkSpec {
     rows.toDF("doc_id", "text")
 
   test("vocab artifact round-trips pieces, weights, and meta exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("tok").toString
+    val dir = TempDirs.dir("tok").toString
     val wf = Tokenizer.wordFreqs(corpus(Seq(
       (1L, "river riverrun runner run"),
       (2L, "run river runner riverrun river"))))
@@ -67,7 +67,7 @@ class TokenizerSpec extends SparkSpec {
   }
 
   test("vocabDrift: self-drift is zero; shifts flag both directions") {
-    val dir = java.nio.file.Files.createTempDirectory("tokdrift").toString
+    val dir = TempDirs.dir("tokdrift").toString
     val train = Tokenizer.wordFreqs(corpus(Seq(
       (1L, "river river river runner runner delta"))))
       .localCheckpoint(false)

@@ -27,7 +27,7 @@ class ZOrderSpec extends SparkSpec {
 
   test("z-ordered files: a narrow x-band touches a fraction of the files") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_z").toString
+    val out = TempDirs.dir("graft_z").toString
     try {
       // uniform 256x256 grid; 16 z-range files = a 4x4 grid of tiles
       val grid = spark.range(0, 65536L)
