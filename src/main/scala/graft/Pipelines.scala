@@ -67,8 +67,12 @@ object Pipelines {
     *
     * The reference's sequential filter loop (app/main.py:242-260) with
     * its double content download (app/main.py:57,176) becomes one
-    * distributed `binaryFile` scan carrying (path, modificationTime,
-    * content) — each file's bytes are read once, in executors.
+    * distributed `binaryFile` scan carrying (path, content) — the date
+    * is decided before the content, as the reference does
+    * (app/main.py:128-143). On the move path the date bounds prune the
+    * scan's file list on the driver, so only in-window files are
+    * planned and opened, each once, in executors; the dry-run
+    * `decisions` frame reports every listed file and so opens them all.
     *
     * @return (decisions, results): decisions has
     *         (src, dst, keep, reason) for every listed file — the
@@ -92,8 +96,8 @@ object Pipelines {
 
   /** The per-file decision plan shared by batch and streaming pipeline
     * B: lake-relative path, rewritten destination, (keep, reason).
-    * Works on any DataFrame with binaryFile's columns
-    * (path, modificationTime, content) — batch scan or file stream.
+    * Works on any binaryFile DataFrame (path, content and the hidden
+    * `_metadata` column) — batch scan or file stream.
     */
   private def decisionsOf(files: DataFrame, root: String,
                           sourcePath: String, targetPath: String,
@@ -107,10 +111,15 @@ object Pipelines {
         regexp_replace(col("path"), "^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?", ""),
         "^" + java.util.regex.Pattern.quote(
           new org.apache.hadoop.fs.Path(root).toUri.getPath), ""), "^/+", ""))
-    // O13 date: binaryFile has no creation time — modificationTime is the
-    // coalesced file date (reference fallback app/main.py:122-124).
+    // O13 date: binaryFile has no creation time — the modification time
+    // is the coalesced file date (reference fallback app/main.py:122-124).
+    // It is read from the hidden `_metadata` column, not binaryFile's
+    // `modificationTime`: both carry FileStatus.getModificationTime, but
+    // a filter on a metadata column is a file filter, so Spark drops
+    // out-of-window files from the listing it already holds on the
+    // driver and `keep`'s date conjuncts cost no task, stat or open.
     val (keep, reason) = Select.selection(
-      col("modificationTime"), decode(col("content"), "UTF-8"),
+      col("_metadata.file_modification_time"), decode(col("content"), "UTF-8"),
       after, before, "SalesCompanyId", companyId)
     withRel.select(
       col("path").as("src"),

@@ -98,12 +98,13 @@ object MoveSink {
       val srcStatus = statusOf(srcFs, srcPath)
       if (srcStatus.isEmpty) {
         // idempotent-retry guard: src gone ∧ dst present ⇒ already done
-        if (move && dstFs.exists(dstPath))
-          MoveResult(src, dst, ok = true, error = null,
-            bytes = dstFs.getFileStatus(dstPath).getLen, status = "success")
-        else
-          MoveResult(src, dst, ok = false, error = s"source not found: $src",
-            bytes = 0L, status = "failed")
+        val dstStatus = if (move) statusOf(dstFs, dstPath) else None
+        dstStatus match {
+          case Some(st) => MoveResult(src, dst, ok = true, error = null,
+            bytes = st.getLen, status = "success")
+          case None => MoveResult(src, dst, ok = false,
+            error = s"source not found: $src", bytes = 0L, status = "failed")
+        }
       } else {
         val size = srcStatus.get.getLen
         val dstExists = dstFs.exists(dstPath)

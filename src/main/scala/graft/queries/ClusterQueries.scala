@@ -28,8 +28,7 @@ object ClusterQueries {
   private def persistedModel(s: SparkSession, dir: String)
       : (Map[Int, Seq[Double]], DataFrame) = {
     val path = kmModelMemo.computeIfAbsent(dir, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_kmmodel").toString
+      val p = graft.TempDirs.dir("graft_kmmodel").toString
       val (assign, model) = KMeans.fit(t(s, dir, "embeddings"),
         k = K, dim = Dim, iters = Iters)
       KMeans.writeModel(s, p, model, assign)

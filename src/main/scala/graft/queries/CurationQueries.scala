@@ -68,8 +68,7 @@ object CurationQueries {
 
   private def curatedInput(s: SparkSession, dir: String): String =
     curateMemo.computeIfAbsent(dir, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_curate").toString + "/raw.parquet"
+      val p = graft.TempDirs.dir("graft_curate").toString + "/raw.parquet"
       t(s, dir, "documents").select(col("doc_id"),
           rawPayload(col("doc_id"), col("text")).as("text"))
         .write.mode("overwrite").parquet(p)
@@ -86,8 +85,7 @@ object CurationQueries {
 
   private def curateDedupInput(s: SparkSession, dir: String): String =
     curateDedupMemo.computeIfAbsent(dir, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_curate_dd").toString + "/raw.parquet"
+      val p = graft.TempDirs.dir("graft_curate_dd").toString + "/raw.parquet"
       val base = t(s, dir, "documents").select(col("doc_id"),
         col("source"), rawPayload(col("doc_id"), col("text")).as("text"))
       base.union(base.filter(col("doc_id") % 13 === 0)
@@ -114,8 +112,7 @@ object CurationQueries {
 
   private def curateDecisionBase(s: SparkSession, dir: String): String =
     curateBaseMemo.computeIfAbsent(dir, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_curate_base").toString +
+      val p = graft.TempDirs.dir("graft_curate_base").toString +
         "/decisions.parquet"
       val screened = graft.Pipelines.curateDecisions(
         s.read.parquet(curateDedupInput(s, dir)),
@@ -137,8 +134,7 @@ object CurationQueries {
   private def curateIndex(s: SparkSession, dir: String)
       : graft.operators.Dedup.BandIndex = {
     val p = curateIdxMemo.computeIfAbsent(dir, _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_curate_idx").toString + "/band"
+      val path = graft.TempDirs.dir("graft_curate_idx").toString + "/band"
       val hist = t(s, dir, "documents").filter(col("doc_id") < 300)
         .select((col("doc_id") + 5000000L).as("doc_id"), col("text"))
       graft.operators.Dedup.writeBandIndex(
@@ -159,8 +155,7 @@ object CurationQueries {
   private def qualityModel(s: SparkSession,
                            dir: String): Map[String, BigDecimal] = {
     val p = qmodelMemo.computeIfAbsent(dir, _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_qmodel").toString + "/clf"
+      val path = graft.TempDirs.dir("graft_qmodel").toString + "/clf"
       val d = t(s, dir, "documents")
       val feats = graft.operators.Logistic
         .hashedFeatures(d, col("source") === lit(DsirTarget))
@@ -213,8 +208,7 @@ object CurationQueries {
   private def qualityTrainedThr(s: SparkSession, dir: String)
       : graft.operators.Logistic.Trained = {
     val p = qthrMemo.computeIfAbsent(dir, _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_qthr").toString + "/clf"
+      val path = graft.TempDirs.dir("graft_qthr").toString + "/clf"
       val m0 = graft.operators.Logistic.Trained(qualityModel(s, dir))
       val hold = evalSplit(t(s, dir, "documents"))
       val thr = graft.operators.Logistic.chooseThreshold(hold, m0,
@@ -237,8 +231,7 @@ object CurationQueries {
 
   private def funnelLedger(s: SparkSession, dir: String): String =
     ledgerMemo.computeIfAbsent(dir, _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ledger").toString + "/funnel"
+      val path = graft.TempDirs.dir("graft_ledger").toString + "/funnel"
       val raw = s.read.parquet(curatedInput(s, dir))
       (0 to 2).foreach { w =>
         val decisions = graft.Pipelines.curateChain(

@@ -48,8 +48,7 @@ object DedupQueries {
     */
   private def persistedIndex(s: SparkSession, dir: String): Dedup.BandIndex = {
     val idxPath = bandIdxMemo.computeIfAbsent(dir, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_bandidx").toString
+      val p = graft.TempDirs.dir("graft_bandidx").toString
       val base = t(s, dir, "documents").filter(col("doc_id") < 300)
         .select("doc_id", "text")
       Dedup.writeBandIndex(Dedup.buildBandIndex(base, "doc_id", "text",

@@ -36,8 +36,7 @@ object GovernanceQueries {
 
   private def provenanceLedger(s: SparkSession, dir: String): String =
     provMemo.computeIfAbsent(dir, _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_prov").toString + "/prov"
+      val path = graft.TempDirs.dir("graft_prov").toString + "/prov"
       val d = t(s, dir, "documents").select(col("doc_id"))
       val P = graft.operators.Provenance
       P.append(s, path, "band/main", "band",

@@ -33,8 +33,7 @@ object SimilarityQueries {
   private def persistedIvf(s: SparkSession, dir: String)
       : Similarity.IvfIndex = {
     val idxPath = ivfIdxMemo.computeIfAbsent(dir, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_ivfidx").toString
+      val p = graft.TempDirs.dir("graft_ivfidx").toString
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"),
           col("embedding").cast("array<double>").as("embedding"))

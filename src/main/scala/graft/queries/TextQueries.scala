@@ -68,8 +68,7 @@ object TextQueries {
     */
   private def frontierPath(s: SparkSession, dir: String): String =
     frontierMemo.computeIfAbsent(dir, _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_frontier").toString + "/urlseen"
+      val path = graft.TempDirs.dir("graft_frontier").toString + "/urlseen"
       val crawled = t(s, dir, "documents").filter(col("doc_id") < 300)
         .select(concat(lit("https://ex"), pmod(col("doc_id"), lit(10)),
           lit(".org/d/"), col("doc_id")).as("url"))
@@ -94,8 +93,7 @@ object TextQueries {
 
   private def sitemapSpool(s: SparkSession, dir: String): String =
     sitemapSpoolMemo.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sitemaps").toString
+      val root = graft.TempDirs.dir("graft_sitemaps").toString
       val rows = t(s, dir, "documents")
         .select(pmod(col("doc_id"), lit(10)).as("host"), col("doc_id"))
         .groupBy("host")
@@ -175,8 +173,7 @@ object TextQueries {
   /** The shared fetch-log artifact's PATH (read-only consumers). */
   private def fetchLogPath(s: SparkSession, dir: String): String =
     fetchLogMemo.computeIfAbsent(dir, _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_fetchlog").toString + "/log"
+      val path = graft.TempDirs.dir("graft_fetchlog").toString + "/log"
       val fetched = t(s, dir, "documents").filter(col("doc_id") < 300)
         .select(concat(lit("https://ex"), pmod(col("doc_id"), lit(10)),
             lit(".org/d/"), col("doc_id")).as("url"),
@@ -205,8 +202,7 @@ object TextQueries {
 
   private def crawlWaveLedger(s: SparkSession, dir: String): String =
     crawlWaveMemo.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_crawlwave").toString
+      val root = graft.TempDirs.dir("graft_crawlwave").toString
       val d = t(s, dir, "documents")
       val crawled = d.filter(col("doc_id") < 300)
         .select(concat(lit("https://ex"), pmod(col("doc_id"), lit(10)),
@@ -280,8 +276,7 @@ object TextQueries {
 
   private def recrawlWaveRoot(s: SparkSession, dir: String): String =
     recrawlWaveMemo.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_recrawl").toString
+      val root = graft.TempDirs.dir("graft_recrawl").toString
       val d = t(s, dir, "documents")
       val crawled = d.filter(col("doc_id") < 300)
         .select(concat(lit("https://ex"), pmod(col("doc_id"), lit(10)),
@@ -337,8 +332,7 @@ object TextQueries {
 
   private def budgetWaveRoot(s: SparkSession, dir: String): String =
     budgetWaveMemo.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_budgetwave").toString
+      val root = graft.TempDirs.dir("graft_budgetwave").toString
       val d = t(s, dir, "documents")
       val crawled = d.filter(col("doc_id") < 300)
         .select(concat(lit("https://ex"), pmod(col("doc_id"), lit(10)),
@@ -394,8 +388,7 @@ object TextQueries {
 
   private def sitemapWaveRoot(s: SparkSession, dir: String): String =
     sitemapWaveMemo.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sitemapwave").toString
+      val root = graft.TempDirs.dir("graft_sitemapwave").toString
       val d = t(s, dir, "documents")
       val crawled = d.filter(col("doc_id") < 300)
         .select(concat(lit("https://ex"), pmod(col("doc_id"), lit(10)),
@@ -584,8 +577,7 @@ object TextQueries {
       : graft.operators.Tokenizer.VocabModel = {
     val Tok = graft.operators.Tokenizer
     val p = tokMemo.computeIfAbsent(s"$dir#$kind", _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_tok").toString + "/" + kind
+      val path = graft.TempDirs.dir("graft_tok").toString + "/" + kind
       val wf = Tok.wordFreqs(t(s, dir, "documents")).localCheckpoint(false)
       val pieces = Tok.induceVocab(wf, kind).localCheckpoint(false)
       val pcs = pieces.collect().map(r => (r.getString(0), r.getLong(1))).toSeq

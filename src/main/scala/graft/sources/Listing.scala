@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.io.FileNotFoundException
 import java.sql.Timestamp
 
 import scala.collection.mutable.ArrayBuffer
@@ -25,8 +26,11 @@ import graft.model.LakeFile
   *    top-level directories.
   *  - `withContent`: Spark's `binaryFile` source — columns
   *    (path, modificationTime, length, content) — used when the content
-  *    predicate (O5/O14) needs the bytes; ONE read per file where the
-  *    reference downloads each moved file twice (app/main.py:57,176).
+  *    predicate (O5/O14) needs the bytes; at most ONE read per file where
+  *    the reference downloads each moved file twice (app/main.py:57,176).
+  *    A file filter on the hidden `_metadata` column (pipeline B's date
+  *    window) prunes the listing on the driver, and a pruned file is
+  *    never opened.
   */
 object Listing {
 
@@ -75,11 +79,11 @@ object Listing {
     import spark.implicits._
     val p = new Path(prefix)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = // recursive; yields files only
+      try fs.listFiles(p, true)
+      catch { case _: FileNotFoundException => return spark.emptyDataset[LakeFile] }
     val out = ArrayBuffer.empty[LakeFile]
-    if (fs.exists(p)) {
-      val it = fs.listFiles(p, true) // recursive; yields files only
-      while (it.hasNext) out += toLakeFile(it.next())
-    }
+    while (it.hasNext) out += toLakeFile(it.next())
     spark.createDataset(out.toSeq)
   }
 
@@ -99,8 +103,9 @@ object Listing {
     val sc = spark.sparkContext
     val p = new Path(prefix)
     val fs = p.getFileSystem(sc.hadoopConfiguration)
-    if (!fs.exists(p)) return spark.emptyDataset[LakeFile]
-    val (files, dirs) = fs.listStatus(p).partition(_.isFile)
+    val (files, dirs) =
+      try fs.listStatus(p).partition(_.isFile)
+      catch { case _: FileNotFoundException => return spark.emptyDataset[LakeFile] }
     val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
     // parallelize, not a repartitioned Dataset: no shuffle to fan out a
     // handful of path strings

@@ -5,6 +5,8 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.operators.MoveSink
@@ -138,6 +140,32 @@ class PipelinesSpec extends SparkSpec {
     assert(dec === Map("old.json" -> false, "new.json" -> true))
     // dryRun: nothing moved
     assert(lakeFiles(root) === Set("raw/old.json", "raw/new.json"))
+  }
+
+  test("pipeline B: inclusive window bounds; the move scan opens only in-window files") {
+    val root = mkLake()
+    val (after, before) = PipelinesSpec.writeWindowLake(root.resolve("raw"))
+    val (decisions, results) = Pipelines.pipelineB(
+      spark, s"file:$root", "raw/", "tgt/", Some(after), Some(before))
+    val dec = decisions.collect()
+      .map(r => r.getString(0).split("/").last -> (r.getBoolean(2), r.getString(3))).toMap
+    val kept = (true, "Matches all criteria")
+    assert(dec === Map(
+      "at_after.json" -> kept, "mid.json" -> kept, "at_before.json" -> kept,
+      "pre_after.json" ->
+        (false, "File uploaded before filter date: 2023-12-31 23:59:59"),
+      "post_before.json" ->
+        (false, "File uploaded after filter date: 2024-01-31 00:00:01")))
+
+    val moved = results.get
+    assert(moved.collect().forall(_.ok))
+    assert(lakeFiles(root) === Set("raw/pre_after.json", "raw/post_before.json",
+      "tgt/at_after.json", "tgt/mid.json", "tgt/at_before.json"))
+    // the date window pruned the scan's file list on the driver: the
+    // executed move plan read the three kept files, not all five
+    val scans = new AdaptiveSparkPlanHelper {}
+      .collect(moved.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    assert(scans.map(_.metrics("numFiles").value) === Seq(3L))
   }
 
   test("pipeline C: curation chain strips, repairs, screens, writes kept") {
@@ -408,5 +436,25 @@ class PipelinesSpec extends SparkSpec {
     assert(above.values.forall(!_))
     assert(keepOf(graft.operators.Logistic.Trained(w))
       .values.forall(identity))
+  }
+}
+
+object PipelinesSpec {
+
+  /** Five files around the window [2024-01-01, 2024-01-31] (UTC): one
+    * on each bound, one a second outside each, one mid-window. Returns
+    * the window as (after, before).
+    */
+  def writeWindowLake(dir: JPath): (Timestamp, Timestamp) = {
+    def at(iso: String) = java.time.Instant.parse(iso).toEpochMilli
+    Files.createDirectories(dir)
+    Seq("pre_after" -> "2023-12-31T23:59:59Z", "at_after" -> "2024-01-01T00:00:00Z",
+        "mid" -> "2024-01-15T12:00:00Z", "at_before" -> "2024-01-31T00:00:00Z",
+        "post_before" -> "2024-01-31T00:00:01Z").foreach { case (name, iso) =>
+      val p = dir.resolve(s"$name.json")
+      Files.writeString(p, """{"SalesCompanyId":"12"}""")
+      Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(at(iso)))
+    }
+    (new Timestamp(at("2024-01-01T00:00:00Z")), new Timestamp(at("2024-01-31T00:00:00Z")))
   }
 }

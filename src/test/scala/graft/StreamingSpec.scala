@@ -43,6 +43,20 @@ class StreamingSpec extends SparkSpec {
     assert(rep2.length === 2) // keep.json not re-moved on restart
   }
 
+  test("streaming pipeline B: date window on the stream, bounds inclusive") {
+    val root = TempDirs.dir("graft-bstream-win")
+    val (after, before) = PipelinesSpec.writeWindowLake(root.resolve("raw"))
+    val q = Pipelines.pipelineBStream(spark, s"file:$root", "raw/", "archive/",
+        checkpointDir = s"file:$root/chk", reportDir = s"file:$root/report",
+        after = Some(after), before = Some(before))
+      .trigger(Trigger.AvailableNow()).start()
+    try q.awaitTermination(120000) finally q.stop()
+    val rep = spark.read.parquet(s"file:$root/report").collect()
+      .map(r => r.getAs[String]("src").split("/").last -> r.getAs[String]("status"))
+    assert(rep.sorted.toSeq === Seq("at_after.json" -> "success",
+      "at_before.json" -> "success", "mid.json" -> "success"))
+  }
+
   test("state store survives restart: dropDuplicates remembers ids across runs") {
     // Exactly-once across process restarts is the property a 100 TB
     // incremental ingest leans on: the dedup state lives in the
