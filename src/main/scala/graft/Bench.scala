@@ -8,6 +8,12 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
+    // optional first arg: comma-separated query names (fast iteration on
+    // one hotspot without the full sweep), checked before the session
+    // starts: an unknown or empty name list fails here instead of
+    // printing an empty sweep that reads as a pass
+    val subset: Option[Set[String]] =
+      args.headOption.map(list => Explain.targets(Some(list)).toSet)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val builder = SparkSession.builder()
@@ -45,16 +51,6 @@ object Bench {
 
     // A crashing query must not masquerade as a timing: failures are
     // listed in a "failed" key and logged, never folded in silently.
-    // optional first arg: comma-separated query names (fast iteration on
-    // one hotspot without the full sweep). Unknown names are loud — a
-    // typo'd or misplaced arg must not masquerade as an instant pass.
-    val subset = args.headOption.map(_.split(",").toSet)
-    subset.foreach { ss =>
-      val unknown = ss -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty)
-        System.err.println(
-          s"[bench] WARNING: unknown query names skipped: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
     val picked = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => subset.forall(_.contains(n)) }
     val results = picked.map { case (name, fn) =>

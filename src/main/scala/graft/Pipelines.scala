@@ -94,10 +94,9 @@ object Pipelines {
     (decisions, results)
   }
 
-  /** The per-file decision plan shared by batch and streaming pipeline
-    * B: lake-relative path, rewritten destination, (keep, reason).
-    * Works on any binaryFile DataFrame (path, content and the hidden
-    * `_metadata` column) — batch scan or file stream.
+  /** Pipeline B's per-file decision plan: lake-relative path,
+    * rewritten destination, (keep, reason). Works on any binaryFile
+    * DataFrame (path, content and the hidden `_metadata` column).
     */
   private def decisionsOf(files: DataFrame, root: String,
                           sourcePath: String, targetPath: String,
@@ -128,55 +127,6 @@ object Pipelines {
       keep.as("keep"), reason.as("reason"))
   }
 
-  /** Streaming pipeline B: the same filter-and-move, continuously —
-    * files arriving under the source prefix are scanned ONCE (streaming
-    * binaryFile source, checkpointed exactly-once bookkeeping), their
-    * decisions computed with the identical plan as the batch form, and
-    * each micro-batch's keepers moved by the distributed sink inside
-    * `foreachBatch`; per-file MoveResults append to a durable parquet
-    * report. Skipped files stay in place (unlike `cleanSource=archive`,
-    * which would relocate everything) — this is the reference's
-    * selective-move contract running as continuous ingestion.
-    *
-    * Returns a configured-but-unstarted `DataStreamWriter`: the caller
-    * picks the trigger and calls `.start()` (use
-    * `.trigger(Trigger.AvailableNow).start()` + `awaitTermination` to
-    * drain a backlog once).
-    */
-  def pipelineBStream(spark: SparkSession, lakeRoot: String,
-                      sourcePath: String, targetPath: String,
-                      checkpointDir: String, reportDir: String,
-                      after: Option[Timestamp] = None,
-                      before: Option[Timestamp] = None,
-                      companyId: Option[String] = None,
-                      maxFilesPerTrigger: Int = 50)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val root = lakeRoot.replaceAll("/+$", "")
-    // streaming file sources require an explicit schema; binaryFile's
-    // is fixed by the format
-    val binarySchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("path",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("modificationTime",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("length",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("content",
-        org.apache.spark.sql.types.BinaryType)))
-    val files = spark.readStream.format("binaryFile")
-      .schema(binarySchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .load(s"$root/$sourcePath")
-    val decisions = decisionsOf(files, root, sourcePath, targetPath,
-      after, before, companyId)
-    decisions.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        MoveSink.run(batch.filter(col("keep")), MoveSink.Move)
-          .write.mode("append").parquet(reportDir)
-      }
-  }
-
   /** Pipeline C — corpus curation, the training-data sibling of the
     * file movers: raw crawl payloads (markup in `textCol`) go through
     * the ingest chain the engine's screens define — markup strip
@@ -184,8 +134,7 @@ object Pipelines {
     * structural quality — and a document is KEPT when it passes
     * quality and carries no PII. Every stage is a stateless map-side
     * native expression or regex projection (no UDF, no shuffle), so
-    * the decision pass is one scan; the same chain is streaming-legal
-    * per stage (CurationStream.{htmlScreen,mojibakeRepair,piiScreen}).
+    * the decision pass is one scan.
     *
     * @return (decisions, written): decisions has (idCol, clean,
     *         had_markup, repaired, has_pii, quality_ok, keep) for
@@ -193,10 +142,8 @@ object Pipelines {
     *         silent drop; written = rows persisted to `output`
     *         (kept docs as (idCol, text)), None when dryRun.
     */
-  /** The curation decision projection — STATELESS column algebra, so
-    * it runs identically on a static or a streaming DataFrame (that
-    * sameness is the batch/stream equivalence
-    * `CurationStream.curateScreen` exposes and StreamingSpec proves).
+  /** The curation decision projection — STATELESS column algebra: one
+    * map-side pass, no shuffle.
     */
   def curateDecisions(raw: DataFrame, idCol: String = "doc_id",
                       textCol: String = "text",
@@ -399,12 +346,7 @@ object Pipelines {
     * frame: fixed screens (markup → mojibake → PII → Gopher quality),
     * then the optional dedup stage (exact within-batch + near-dup
     * against a persisted band index), then the optional policy stages
-    * (language allow-list, per-group quota). This is the batch body a
-    * streaming deployment applies per micro-batch
-    * ([[graft.streaming.CurationStream.curateMicroBatch]]) — the
-    * dedup/quota stages need a within-batch window, so the streaming
-    * twin runs it inside `foreachBatch`, bit-equal to the batch run
-    * over the same rows by construction (StreamingSpec proves it).
+    * (language allow-list, per-group quota).
     */
   def curateChain(raw: DataFrame, idCol: String = "doc_id",
                   textCol: String = "text", dedup: Boolean = false,

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis primitives for the training-data pipeline extensions:
@@ -228,5 +228,21 @@ object Text {
       lit(new java.math.BigDecimal(0)).cast(accTy),
       (acc, x) =>
         (acc + element_at(wmap, substring(md5(x), 1, 1))).cast(accTy))
+  }
+
+  /** Score each document with the hashed linear classifier
+    * ([[hashedLinearDot]] over its tokens): emits (idCol, n_tokens,
+    * logit, kept). `kept` is the sign of the exact-decimal dot
+    * product; `logit` is its one correctly-rounded division by the
+    * token count.
+    */
+  def hashedLinearScores(docs: DataFrame, idCol: String, textCol: String,
+                         weights: Seq[(String, String)]): DataFrame = {
+    val tok = tokens(col(textCol))
+    val dot = hashedLinearDot(tok, weights)
+    docs.select(col(idCol),
+      size(tok).cast("long").as("n_tokens"),
+      round(dot.cast("double") / size(tok).cast("double"), 4).as("logit"),
+      (dot > 0).as("kept"))
   }
 }

@@ -14,9 +14,7 @@ import org.apache.spark.sql.functions._
   * task's slice to ≤ depth·width rows before the exchange; the sketch
   * is independent of stream length, which is the whole point at
   * 100 TB. Like HLL, counters merge by per-cell SUM (associative,
-  * commutative), so per-partition/day sketches fold afterwards; a
-  * streaming aggregation maintains the cells directly
-  * ([[graft.streaming.SketchStream.cmsCounters]]).
+  * commutative), so per-partition/day sketches fold afterwards.
   */
 object Cms {
 
@@ -24,9 +22,8 @@ object Cms {
   def bucket(d: Int, c: Column, width: Int): Column =
     Kmv.hash52(concat(lit(s"cms$d:"), c)) % width
 
-  /** The stateless per-row half of the sketch: each input row exploded
-    * to its `depth` (d, b) cells — shared by batch [[counters]] and
-    * the streaming twin.
+  /** The stateless per-row half of [[counters]]: each input row
+    * exploded to its `depth` (d, b) cells.
     */
   def cells(df: DataFrame, keyCol: Column, depth: Int,
             width: Int): DataFrame =

@@ -119,8 +119,7 @@ object CrawlState {
     * equi-join on the canonical url key. Emits (url, host, known) —
     * distinct canonical candidates. This is the daily frontier check
     * that never re-derives the crawled set (`f_frontier`'s read
-    * path) and the static side of the streaming
-    * [[graft.streaming.CurationStream.frontierScreen]].
+    * path).
     */
   def screenUrls(candidates: DataFrame, idx: UrlIndex,
                  urlCol: String = "url"): DataFrame = {

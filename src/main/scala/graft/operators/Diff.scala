@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * reports, and "what did this backfill touch?".
   *
   * One full-outer equi-join on the key (the natural co-partitioning —
-  * with both snapshots bucketed on the key it is exchange-free, see
-  * [[Layout]]), change detection via null-safe comparison of the
+  * with both snapshots bucketed on the key it is exchange-free),
+  * change detection via null-safe comparison of the
   * compared columns packed into one struct — no N-way OR of per-column
   * inequalities, and nulls inside values compare correctly.
   */
@@ -43,10 +43,10 @@ object Diff {
     * so an "update" that changes nothing reports unchanged).
     *
     * Scale: with base and updates bucketed on the key the join is
-    * exchange-free ([[Layout]]); otherwise it is the one shuffle a
-    * MERGE fundamentally needs. No driver-side state; rewriting only
-    * the touched partitions is the storage layer's job
-    * ([[Layout.writePartitioned]] + partition pruning on the keys).
+    * exchange-free; otherwise it is the one shuffle a MERGE
+    * fundamentally needs. No driver-side state; rewriting only the
+    * touched partitions is the storage layer's job (a partitioned
+    * layout plus partition pruning on the keys).
     *
     * @param valueCols columns carried by both frames; the update's
     *                  value wins on matched keys

@@ -11,25 +11,14 @@ import graft.functions.Text
   * smoothed bucket-level LMs for the target domain and the raw
   * corpus, and weight each document by Σ_b k_b·ln(p_tgt(b)/p_raw(b)).
   *
-  * Two scoring paths with identical values:
-  *
-  *  - [[scoreRelational]] — the batch shape: corpus features
-  *    equi-join the ≤`buckets`-row LM table (broadcast), one
-  *    map-combinable doc aggregation. Use when scoring the corpus the
-  *    LM was built from.
-  *  - [[scoreInline]] — the λ table collected ONCE into a plan-literal
-  *    map (the same artifact shape as the IVF coarse quantizer), the
-  *    per-doc sum an exact-decimal `aggregate` HOF: stateless,
-  *    ZERO shuffle, and therefore directly usable on a STREAMING
-  *    DataFrame — score documents at ingest against an offline-built
-  *    target model. Buckets never seen in the build corpus fall back
-  *    to the exact unseen-bucket λ (nt = nr = 0 under add-1
-  *    smoothing), so the contract is total.
+  * Scoring ([[scoreRelational]]): corpus features equi-join the
+  * ≤`buckets`-row LM table (broadcast), one map-combinable doc
+  * aggregation.
   *
   * Determinism: the ln argument is one IEEE division of exact ≤2^53
   * integer products; each bucket's λ rounds to 4 dp into DECIMAL; doc
-  * sums are exact DECIMAL — bit-stable under any partitioning, batch
-  * boundaries, or arrival order.
+  * sums are exact DECIMAL — bit-stable under any partitioning or row
+  * order.
   */
 object Dsir {
 
@@ -80,60 +69,4 @@ object Dsir {
       .agg(sum(col("k")).cast("long").as("n_bigrams"),
         sum(col("k").cast("decimal(18,0)") * col("lam"))
           .cast("double").as("logw"))
-
-  /** Collect the λ table into the (map, unseen-bucket default) pair
-    * [[scoreInline]] inlines as plan literals. One driver pull of
-    * ≤16^hexChars narrow rows — the trained-model artifact.
-    */
-  def lamLiteral(lam: DataFrame, hexChars: Int = 2)
-      : (Map[String, java.math.BigDecimal], java.math.BigDecimal) = {
-    val nB = bucketCount(hexChars)
-    val rows = lam.select("b", "lam", "rtot", "ttot").collect()
-    require(rows.nonEmpty, "empty lambda table")
-    val m = rows.map(r => r.getString(0) -> r.getDecimal(1)).toMap
-    val (rtot, ttot) = (rows.head.getLong(2), rows.head.getLong(3))
-    // the exact unseen-bucket λ (nt = nr = 0): HALF_UP on the
-    // canonical decimal rendering — the same rounding Spark's
-    // round(_, 4) applies, so the fallback is bit-consistent with the
-    // table entries
-    val default = java.math.BigDecimal.valueOf(
-      math.log((rtot + nB).toDouble / (ttot + nB).toDouble))
-      .setScale(4, java.math.RoundingMode.HALF_UP)
-    (m, default)
-  }
-
-  /** Stateless scoring against a plan-literal λ map: an exact-decimal
-    * `aggregate` HOF per row — zero shuffle, works identically on a
-    * static or STREAMING DataFrame (the in-flight half of the
-    * importance-resampling loop). Emits (idCol, n_bigrams, logw),
-    * bit-equal to [[scoreRelational]] over the same rows.
-    */
-  def scoreInline(docs: DataFrame,
-                  lamMap: Map[String, java.math.BigDecimal],
-                  defaultLam: java.math.BigDecimal,
-                  idCol: String, textCol: String,
-                  hexChars: Int = 2): DataFrame = {
-    require(lamMap.nonEmpty, "empty lambda map")
-    // O(1) per-shingle lookup: the bucket id IS the hex value of the
-    // md5 prefix, so the λ map flattens to a plan-literal ARRAY
-    // indexed by conv(prefix, 16, 10) (a literal map's element_at
-    // scans all 16^hexChars entries per shingle). Unseen buckets
-    // pre-fill with the exact default the coalesce supplied — summed
-    // values identical, results bit-identical to the map form.
-    val hex = "0123456789abcdef".map(_.toString)
-    val buckets = (1 until hexChars).foldLeft(hex: Seq[String]) {
-      (acc, _) => acc.flatMap(p => hex.map(p + _))
-    }
-    val warr = array(buckets.map(b =>
-      lit(lamMap.getOrElse(b, defaultLam))): _*)
-    val sh = Text.shingles(Text.tokens(col(textCol)), 2)
-    val accTy = "decimal(38,4)"
-    val dot = aggregate(sh, lit(java.math.BigDecimal.ZERO).cast(accTy),
-      (acc, bg) => (acc + element_at(warr,
-        conv(bucketOf(bg, hexChars), 16, 10).cast("int") + 1))
-        .cast(accTy))
-    docs.select(col(idCol), size(sh).cast("long").as("n_bigrams"),
-        dot.cast("double").as("logw"))
-      .filter(col("n_bigrams") > 0)
-  }
 }

@@ -11,10 +11,7 @@ import org.apache.spark.sql.functions._
   * equi-joins on user_id (no window, no cartesian): min qualifying ts
   * per step, exactly the reference pattern for funnel SQL. It is the
   * single source of funnel semantics: the `e_funnel` query is
-  * `stages(...).groupBy(stage)`, and the streaming twin
-  * ([[graft.streaming.EventStreams.funnelStream]]) replays the same
-  * greedy first-qualifying-event rule as a per-user state machine —
-  * StreamingSpec pins the two bit-equal on ordered delivery.
+  * `stages(...).groupBy(stage)`.
   *
   * Scale: each step's frame is |users-reaching-step| rows (shrinking
   * monotonically); the joins are keyed equi-joins AQE can broadcast

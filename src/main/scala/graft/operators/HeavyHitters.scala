@@ -31,11 +31,10 @@ import scala.collection.mutable
   */
 object HeavyHitters {
 
-  /** One Misra–Gries update on a mutable counter map — THE sketch step,
-    * shared by the batch operator below and the streaming state in
-    * [[graft.streaming.Trending]] so the two can never drift. */
-  private[graft] def mgStep(counters: mutable.HashMap[String, Long],
-                            item: String, capacity: Int): Unit =
+  /** One Misra–Gries update on a mutable counter map — THE sketch step
+    * of the operator below. */
+  private def mgStep(counters: mutable.HashMap[String, Long],
+                     item: String, capacity: Int): Unit =
     counters.get(item) match {
       case Some(c) => counters.update(item, c + 1)
       case None if counters.size < capacity => counters.update(item, 1L)

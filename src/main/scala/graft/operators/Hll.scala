@@ -76,10 +76,7 @@ object Hll {
       .groupBy("g", "reg").agg(max(col("rho")).as("mj"))
 
   /** The stateless per-row half of [[registers]]: (g, reg, rho) for
-    * every input row — shared verbatim by the streaming register
-    * maintenance ([[graft.streaming.SketchStream]]), whose only
-    * addition is running the same groupBy-MAX as a streaming
-    * aggregation.
+    * every input row.
     */
   def rhoRows(df: DataFrame, groupCol: Column, valueCol: Column): DataFrame = {
     val h = Kmv.hash52(valueCol)

@@ -15,11 +15,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * is inherently sequential, so the engine shape is "keyed fold over a
   * bounded series": the corpus-sized work is ONE hourly aggregation;
   * each per-key series (hours in the window — hundreds of rows, never
-  * event-sized) folds inside `mapGroups`. The SAME step function runs
-  * in the streaming twin (`flatMapGroupsWithState` with an (l, b)
-  * state record), so online monitoring is bit-equal to the batch
-  * backfill — the fit-offline/monitor-online contract the CUSUM twin
-  * established.
+  * event-sized) folds inside `mapGroups`.
   *
   * Determinism: the recursion carries raw IEEE doubles through the
   * exact literal expression `α·x + (1−α)·(l + b)` — no libm, no

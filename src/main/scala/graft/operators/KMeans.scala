@@ -180,9 +180,7 @@ object KMeans {
   }
 
   /** Score rows against a fitted centroid model: map-side argmin over
-    * the plan-literal centroids — stateless, zero shuffle, usable on a
-    * batch OR streaming DataFrame (the streaming twin
-    * `DedupStream.clusterScreen` delegates here). Returns
+    * the plan-literal centroids — stateless, zero shuffle. Returns
     * (idCol, cid, dist) with dist = squared L2 rounded to 6.
     */
   def assignTo(df: DataFrame, model: Map[Int, Seq[Double]],

@@ -61,8 +61,7 @@ object TimeSeries {
     * (rows, not wall-time — sparse series score against what was
     * observed). Mean and variance come from exact integer sums of n
     * and n², and every post-sum op is IEEE +,-,*,/,sqrt — z is
-    * bit-reproducible under any partitioning and matches the
-    * streaming form (`EventStreams.anomalyStream`) exactly. Bins with
+    * bit-reproducible under any partitioning. Bins with
     * fewer than `lookback` predecessors or zero variance are dropped.
     *
     * Scale: the window runs over ONE ROW PER BIN per key — bounded by
@@ -102,8 +101,7 @@ object TimeSeries {
     * (keeps Σx² in long range at any epoch and makes the intercept
     * "level at the key's first bin"). Σx, Σy, Σxy, Σx² are exact
     * integer sums; the closed form is then pure IEEE doubles —
-    * bit-reproducible under any partitioning and matched exactly by
-    * the streaming form (`EventStreams.trendStream`).
+    * bit-reproducible under any partitioning.
     *
     * Scale: two map-combinable aggregations over one row per
     * (key, bin) — regression state per key is 5 numbers.

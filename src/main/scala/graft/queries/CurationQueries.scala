@@ -928,14 +928,13 @@ object CurationQueries {
     //      for real trained weights; the demo vector is fixed and
     //      documented). The per-doc dot product is an exact-decimal
     //      `aggregate` HOF over the token array — ZERO shuffle, the
-    //      whole query runs at scan speed — and the identical
-    //      projection scores streaming ingest
-    //      (streaming/CurationStream, spec-proven bit-equal).
+    //      whole query runs at scan speed; the projection is
+    //      stateless, so a stream scores bit-equal to batch.
     //      keep/drop decides on the exact DECIMAL dot product (sign
     //      never touches IEEE); the reported logit is one
     //      correctly-rounded double division ----
     "t_quality_classifier" -> ((s, dir) =>
-      graft.streaming.CurationStream.scored(
+      Text.hashedLinearScores(
         t(s, dir, "documents"), "doc_id", "text", ClfWeights)),
 
     // ---- RefinedWeb-style per-domain boilerplate scrub: a segment

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables.t
 
-/** Event-stream analytics over `events` in batch form — the same plan
-  * shapes graft.streaming runs incrementally (tumbling windows,
-  * gap-based sessionization). Money-style sums use exact DECIMAL before
+/** Event-stream analytics over `events` in batch form (tumbling and
+  * hopping windows, gap-based sessionization, funnels, as-of joins).
+  * Money-style sums use exact DECIMAL before
   * the final double cast so 32-partition Spark and single-threaded
   * DuckDB agree bitwise.
   */
@@ -92,9 +92,7 @@ object EventQueries {
     //      within 24h → purchase within 24h of the click. Stage minima
     //      computed in dependency order (three cheap per-user
     //      aggregations, no window over the raw stream) ----
-    // stage assignment shared with the streaming state machine
-    // (operators/Funnel.stages; EventStreams.funnelStream is pinned
-    // bit-equal per user in StreamingSpec)
+    // stage assignment: operators/Funnel.stages
     "e_funnel" -> ((s, dir) => {
       graft.operators.Funnel.stages(t(s, dir, "events").localCheckpoint(false))
         .groupBy("stage").agg(count(lit(1)).as("n_users"))

@@ -106,10 +106,9 @@ object GovernanceQueries {
     //      integer ppm; `keep` is a pure threshold rule on them.
     //      Shapes: hash agg + equi-join + per-source agg — every stage
     //      keyed, map-combinable, skew-free (md5 keys). ----
-    // batch = rollup(ledger): the SAME two functions a streaming
-    // monitor composes (ledger as streaming groupBy state, rollup per
-    // micro-batch snapshot via foreachBatch) — StreamingSpec proves the
-    // stream path bit-equal to this query
+    // batch = rollup(ledger): the ledger is a plain groupBy, so it also
+    // runs as streaming aggregation state, and the rollup of its
+    // snapshot equals this query (StreamingSpec)
     "t_domain_stats" -> ((s, dir) =>
       graft.operators.Quality.domainRollup(
         graft.operators.Quality.domainLedger(t(s, dir, "documents")))),

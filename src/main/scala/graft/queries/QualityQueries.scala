@@ -39,13 +39,8 @@ object QualityQueries {
     // 2^53, so a double sum would silently lose bits).
     // STRING digest on both engine and oracle sides: the value exceeds
     // 2^63, and comparator canonicalization of wide DECIMALs differs
-    // between runtimes; a digest is an opaque token anyway. The SAME
-    // projection serves the streaming twin
-    // (CurationStream.digestStream) — one implementation, no drift.
-    "q_corpus_digest" -> ((s, dir) => {
-      graft.streaming.CurationStream.digestStream(
-        t(s, dir, "documents"), "doc_id", "text")
-    }),
+    // between runtimes; a digest is an opaque token anyway.
+    "q_corpus_digest" -> ((s, dir) => corpusDigest(t(s, dir, "documents"))),
 
     // Referential integrity events.user_id → customer.c_custkey: one
     // distinct-project of the parent key + one anti-join count. At
@@ -57,6 +52,19 @@ object QualityQueries {
         t(s, dir, "customer"), "c_custkey", "user_fk")
     })
   )
+
+  /** (n_docs, digest) of `docs`' (doc_id, text) rows. The digest is a
+    * sum, so a Complete-mode streaming aggregation of the same
+    * projection equals this after every prefix of the stream, with
+    * one sum and one count of state.
+    */
+  def corpusDigest(docs: DataFrame): DataFrame =
+    docs
+      .select(conv(substring(md5(concat(col("doc_id").cast("string"),
+          lit(":"), col("text"))), 1, 15), 16, 10)
+        .cast("decimal(20,0)").as("h"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("h")).cast("decimal(38,0)").cast("string").as("digest"))
 
   val oracleSql: Map[String, String] = Map(
     "q_corpus_digest" ->

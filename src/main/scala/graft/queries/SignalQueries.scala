@@ -348,9 +348,8 @@ object SignalQueries {
     //      replaces snaive once e_snaive_backtest shows drift. The
     //      recursion is sequential by nature, so the engine shape is
     //      ONE corpus-sized hourly agg + a keyed `mapGroups` fold over
-    //      each bounded series (operators/Holt — the same step
-    //      function the streaming twin folds online with (l, b)
-    //      state). Raw IEEE doubles through the recursion (literal
+    //      each bounded series (operators/Holt). Raw IEEE doubles
+    //      through the recursion (literal
     //      0.8/0.9, never computed 1−α — the ulp fork matters over
     //      700 iterations), rounded once at the edge; the oracle is a
     //      recursive CTE replaying the identical formula. ----

@@ -2693,7 +2693,7 @@ object TextQueries {
     //      threshold. Ratios are integer counts + one IEEE division;
     //      empty denominators emit NULL ----
     "t_classifier_pr_curve" -> ((s, dir) => {
-      val scored = graft.streaming.CurationStream.scored(
+      val scored = Text.hashedLinearScores(
           t(s, dir, "documents"), "doc_id", "text",
           CurationQueries.ClfWeights)
         .join(t(s, dir, "documents").select("doc_id", "n_chars"), "doc_id")
@@ -2732,7 +2732,7 @@ object TextQueries {
     //      10 bins; the closing ECE is a broadcast fold of the
     //      10-row frame. ----
     "t_classifier_ece" -> ((s, dir) => {
-      val scored = graft.streaming.CurationStream.scored(
+      val scored = Text.hashedLinearScores(
           t(s, dir, "documents"), "doc_id", "text",
           CurationQueries.ClfWeights)
         .join(t(s, dir, "documents").select("doc_id", "n_chars"), "doc_id")
@@ -2772,7 +2772,7 @@ object TextQueries {
     //      (DECIMAL past that — noted). Output: bin, n, raw rate,
     //      calibrated rate (nondecreasing by construction). ----
     "t_isotonic_calibration" -> ((s, dir) => {
-      val scored = graft.streaming.CurationStream.scored(
+      val scored = Text.hashedLinearScores(
           t(s, dir, "documents"), "doc_id", "text",
           CurationQueries.ClfWeights)
         .join(t(s, dir, "documents").select("doc_id", "n_chars"), "doc_id")

@@ -161,7 +161,7 @@ object Sitemaps {
     * NEXT declared change — the common case for intraday-updating
     * hosts.
     */
-  private[graft] def lastmodParsed(lm: Column): Column = {
+  private def lastmodParsed(lm: Column): Column = {
     val noFrac = regexp_replace(lm, "\\.\\d+", "")
     val full = coalesce(
       try_to_timestamp(noFrac, lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
@@ -221,12 +221,11 @@ object Sitemaps {
           col("fetched_at")).as("status"))
   }
 
-  /** The shared classification clause (batch [[recrawlPlan]] and the
-    * streaming twin apply the identical algebra): timestamped
+  /** [[recrawlPlan]]'s classification clause: timestamped
     * declarations compare instants, date-only ones compare dates.
     */
-  private[graft] def recrawlStatus(ts: Column, hasTime: Column,
-                                   fetchedAt: Column): Column =
+  private def recrawlStatus(ts: Column, hasTime: Column,
+                            fetchedAt: Column): Column =
     when(fetchedAt.isNull, lit("new"))
       .when(ts.isNull, lit("unknown"))
       .when(hasTime,

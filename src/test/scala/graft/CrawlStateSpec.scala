@@ -345,26 +345,4 @@ class CrawlStateSpec extends SparkSpec {
       .count(_.getName.endsWith(".parquet"))
     assert(parts <= 4)
   }
-
-  test("streaming frontierScreen reads the persisted artifact's urls") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val root = TempDirs.dir("graft-urlseen-s").toString
-    CrawlState.writeUrlIndex(CrawlState.buildUrlIndex(
-      Seq("https://ex.org/seen/1").toDF("url")), s"$root/idx")
-    val known = CrawlState.readUrlIndex(spark, s"$root/idx").urls
-    val mem = MemoryStream[(Long, String)]
-    val q = graft.streaming.CurationStream.frontierScreen(
-        mem.toDF().toDF("doc_id", "text"), known)
-      .writeStream.format("memory").queryName("fs_art")
-      .outputMode("append").start()
-    val html = "<a href=\"https://ex.org/seen/1\">a</a>" +
-      "<a href=\"https://ex.org/new/2\">b</a>"
-    try { mem.addData(Seq((1L, html))); q.processAllAvailable() }
-    finally q.stop()
-    val got = spark.sql("SELECT url, known FROM fs_art").collect()
-      .map(r => r.getString(0) -> r.getBoolean(1)).toMap
-    assert(got === Map("https://ex.org/seen/1" -> true,
-      "https://ex.org/new/2" -> false))
-  }
 }

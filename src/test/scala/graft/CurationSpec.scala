@@ -145,4 +145,32 @@ class CurationSpec extends SparkSpec {
     assert(out.last._5 == total)
     out.foreach(r => assert(r._4 >= 0 && r._4 <= 1000000L))
   }
+
+  test("DSIR: lamTable covers the bigram buckets; scoreRelational sums k·λ per doc") {
+    import spark.implicits._
+    import graft.functions.Text
+    import graft.operators.Dsir
+    val corpus = Tables.t(spark, dir, "documents")
+      .select($"doc_id", $"text", $"source").localCheckpoint(false)
+    val lam = Dsir.lamTable(corpus, "text", $"source" === "src18")
+      .localCheckpoint(false)
+    val lamOf = lam.select("b", "lam").collect()
+      .map(r => r.getString(0) -> BigDecimal(r.getDecimal(1))).toMap
+    // nearly all 256 md5-prefix buckets occur even at this tiny SF
+    assert(lamOf.size >= 200 && lamOf.size <= 256, s"${lamOf.size}")
+    val got = Dsir.scoreRelational(corpus, lam, "doc_id", "text").collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+    val buckets = corpus.select($"doc_id",
+        explode(Text.shingles(Text.tokens($"text"), 2)).as("bg"))
+      .select($"doc_id", substring(md5($"bg"), 1, 2).as("b")).collect()
+      .groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getString(1)) }
+    assert(got.keySet === buckets.keySet)
+    buckets.foreach { case (id, bs) =>
+      val (n, logw) = got(id)
+      val want = bs.map(lamOf).sum.toDouble
+      assert(n === bs.length.toLong, s"doc $id")
+      assert(math.abs(logw - want) <= 1e-9 * math.max(1.0, math.abs(want)),
+        s"doc $id: $logw vs $want")
+    }
+  }
 }

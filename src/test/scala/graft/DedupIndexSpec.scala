@@ -140,39 +140,4 @@ class DedupIndexSpec extends SparkSpec {
     assert(collectDfs(noop.dfs) === collectDfs(union.dfs))
     assert(collectSets(noop.sets) === collectSets(union.sets))
   }
-
-  test("streaming screen over the persisted index equals the batch check") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val root = TempDirs.dir("graft-bandidx-str").toString
-    val base = corpus(corpusA ++ corpusB.filter(_._1 >= 20))
-    Dedup.writeBandIndex(
-      Dedup.buildBandIndex(base, "doc_id", "text", 3, 3, 2), root)
-    val idx = Dedup.readBandIndex(spark, root)
-    val newRows = corpusB.filter(_._1 < 20)
-      .map { case (id, t) => (id + 500000L, t) }
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val flagged = graft.streaming.DedupStream.screenAgainstIndex(
-      mem.toDF().toDF("doc_id", "text"), idx,
-      "doc_id", "text", n = 3, bands = 3, rowsPerBand = 2, threshold = 0.5)
-    val q = flagged.writeStream.format("memory").queryName("idxscreen")
-      .outputMode("append").start()
-    try {
-      mem.addData(newRows.take(3): _*)
-      q.processAllAvailable()
-      mem.addData(newRows.drop(3): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.sql(
-        "SELECT DISTINCT new_id, base_id, jaccard FROM idxscreen")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    val batch = Dedup.pairsAgainstIndex(corpus(newRows), idx,
-        "doc_id", "text", n = 3, bands = 3, rowsPerBand = 2,
-        threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    assert(streamed.nonEmpty && streamed === batch)
-  }
 }

@@ -49,6 +49,28 @@ class GovernanceSpec extends SparkSpec {
     assert(out.forall(r => math.abs(r.getDouble(3)) > 3.0))
   }
 
+  test("e_mad_outliers: rows are exactly robustStats' outliers, same robust z") {
+    val out = SparkEntry.queries("e_mad_outliers")(spark, dir).collect()
+    // the rows are exactly the events robustStats' (median, MAD) put
+    // beyond 3 robust sigmas, with the same robust z
+    val e = Tables.t(spark, dir, "events")
+      .select("event_id", "event_type", "value")
+    val stats = graft.operators.Quality.robustStats(e, "event_type", "value")
+      .collect().map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2))))
+      .toMap
+    val want = e.collect().filterNot(_.isNullAt(2)).flatMap { r =>
+      val (id, ty, v) = (r.getLong(0), r.getString(1), r.getDouble(2))
+      stats.get(ty).collect {
+        case (med, mad) if mad > 0.0 && math.abs(v - med) > 3.0 * 1.4826 * mad =>
+          (id, ty, v, (v - med) / (1.4826 * mad))
+      }
+    }.sortBy(_._1).toSeq
+    val got = out
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getDouble(3)))
+      .sortBy(_._1).toSeq
+    assert(got === want)
+  }
+
   test("q_dp_histogram: noise matches the inverse-CDF replay and is nonzero") {
     val out = SparkEntry.queries("q_dp_histogram")(spark, dir).collect()
     assert(out.nonEmpty)

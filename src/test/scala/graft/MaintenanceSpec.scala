@@ -2,50 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Diff, Layout}
+import graft.operators.Diff
 
-/** Table-maintenance operators: small-file compaction and snapshot
-  * diff. */
+/** Table-maintenance operators: observed quality gates, snapshot diff,
+  * upsert, time travel and schema evolution. */
 class MaintenanceSpec extends SparkSpec {
-
-  test("compact: many small files become targetFiles, data unchanged") {
-    val out = TempDirs.dir("graft_compact").toString
-    try {
-      // simulate a micro-batch sink's residue: 32 tiny files
-      spark.range(0, 10000L).repartition(32)
-        .write.mode("overwrite").parquet(out)
-      def dataFiles(): Int = new java.io.File(out)
-        .listFiles().count(_.getName.endsWith(".parquet"))
-      assert(dataFiles() === 32)
-      val before = spark.read.parquet(out)
-        .agg(count(lit(1)), sum(col("id"))).head()
-      val n = Layout.compact(spark, out, targetFiles = 4)
-      assert(n === 4 && dataFiles() === 4)
-      val after = spark.read.parquet(out)
-        .agg(count(lit(1)), sum(col("id"))).head()
-      assert(after === before)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
-    }
-  }
-
-  test("writeSharded: per-file row bound enforced, manifest sums to total") {
-    import spark.implicits._
-    val out = TempDirs.dir("graft_shard").toString + "/shards"
-    try {
-      val df = (1L to 1000L).map(i => (i, s"doc$i")).toDF("id", "text")
-      val manifest = graft.operators.Layout.writeSharded(df, out, rowsPerShard = 128)
-        .as[(String, Long)].collect()
-      assert(manifest.map(_._2).sum === 1000L)
-      assert(manifest.forall(_._2 <= 128), manifest.toSeq)
-      assert(manifest.length >= 8) // ceil(1000/128)
-      // round-trip intact
-      assert(spark.read.parquet(out).count() === 1000L)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(out).getParentFile)
-    }
-  }
 
   test("observed quality gates: metrics accumulate during the action, no extra pass") {
     import spark.implicits._

@@ -203,69 +203,6 @@ class PlanSpec extends SparkSpec {
     assert("""\(\d+\) Exchange""".r.findAllIn(scd).length === 1, scd)
   }
 
-  test("partitioned layout: a partition-column filter prunes at planning time") {
-    import org.apache.spark.sql.functions._
-    val dir = "/root/testdata/sf0.001"
-    val out = TempDirs.dir("graft_part").toString
-    try {
-      val ev = Tables.t(spark, dir, "events")
-        .withColumn("event_date", col("ts").cast("date"))
-      graft.operators.Layout.writePartitioned(ev, out, Seq("event_date"))
-      val back = graft.operators.Layout.readPartitioned(spark, out)
-      val oneDay = back.filter(col("event_date") ===
-        ev.select(min(col("ts").cast("date"))).head().getDate(0))
-      val plan = oneDay.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      // the filter lands in PartitionFilters (directory pruning), and
-      // is NOT a data filter the scan must evaluate per row
-      assert(plan.contains("PartitionFilters") &&
-        "PartitionFilters: \\[[^\\]]*event_date".r.findFirstIn(plan).isDefined, plan)
-      // pruning is semantically invisible
-      val want = ev.filter(col("ts").cast("date") ===
-        ev.select(min(col("ts").cast("date"))).head().getDate(0)).count()
-      assert(oneDay.count() === want)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
-    }
-  }
-
-  test("bucketed layout removes the fact-to-fact join exchange (SCALE.md §2)") {
-    import org.apache.spark.sql.functions.col
-    val dir = "/root/testdata/sf0.001"
-    // force the sort-merge path so the exchange (or its absence) is
-    // what's under test, not a size-based broadcast
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      def exchanges(df: org.apache.spark.sql.DataFrame): Int =
-        "Exchange hashpartitioning".r
-          .findAllIn(df.queryExecution.executedPlan.toString).length
-
-      val orders = Tables.t(spark, dir, "orders").select("o_orderkey", "o_orderstatus")
-      val lineitem = Tables.t(spark, dir, "lineitem").select("l_orderkey", "l_quantity")
-      val plain = lineitem.join(orders, col("l_orderkey") === col("o_orderkey"))
-      assert(exchanges(plain) === 2) // both facts shuffle on the key
-
-      spark.sql("DROP TABLE IF EXISTS b_orders")
-      spark.sql("DROP TABLE IF EXISTS b_lineitem")
-      graft.operators.Layout.writeBucketed(orders, "b_orders", "o_orderkey", 4)
-      graft.operators.Layout.writeBucketed(lineitem, "b_lineitem", "l_orderkey", 4)
-      val bucketed = graft.operators.Layout.readBucketed(spark, "b_lineitem")
-        .join(graft.operators.Layout.readBucketed(spark, "b_orders"),
-          col("l_orderkey") === col("o_orderkey"))
-      // co-located layout: the join consumes bucket-local sorted runs —
-      // zero shuffle, the property that makes repeated fact⋈fact joins
-      // affordable at 100 TB
-      assert(exchanges(bucketed) === 0, bucketed.queryExecution.executedPlan.toString)
-      assert(bucketed.queryExecution.executedPlan.toString.contains("SortMergeJoin"))
-      assert(bucketed.count() === plain.count())
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS b_orders")
-      spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    }
-  }
-
   test("round-4 session shapes: shuffle-free chunking, cartesian-free candidates") {
     // chunking is pure per-row HOFs — NO exchange anywhere in the plan
     val chunk = planOf("t_chunk_overlap")
@@ -438,17 +375,6 @@ class PlanSpec extends SparkSpec {
     val ds = planOf("t_domain_stats")
     assert(!ds.contains("CartesianProduct"), ds)
     assert(ds.contains("HashAggregate"), ds)
-
-    // streaming mad screen: literal stats -> stateless project/filter,
-    // zero exchanges
-    val scr = graft.streaming.EventStreams.madScreen(
-      Tables.t(spark, "/root/testdata/sf0.001", "events")
-        .select(org.apache.spark.sql.functions.col("event_id"),
-          org.apache.spark.sql.functions.col("event_type"),
-          org.apache.spark.sql.functions.col("value")),
-      Map("click" -> (1.0, 0.5)))
-      .queryExecution.explainString(FormattedMode)
-    assert(!scr.contains("Exchange"), s"madScreen shuffles:\n$scr")
   }
 
   test("round-8 session shapes: KMV object agg, phrase broadcast, erasure semi") {

@@ -165,35 +165,6 @@ class SitemapsSpec extends SparkSpec {
       m(0).getAs[Boolean]("lastmod_has_time"))
   }
 
-  test("streaming recrawlScreen == batch recrawlPlan on mirror-free input") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val log = graft.operators.CrawlState.buildFetchLog(Seq(
-      ("https://ex.org/p1", "2024-01-15"),
-      ("https://ex.org/p2", "2024-01-15")).toDF("url", "fetched_at"))
-    val entries = Seq(
-      ("https://ex.org/p1", "2024-01-20"), // stale
-      ("https://ex.org/p2", "2024-01-10"), // fresh
-      ("https://ex.org/p3", "2024-01-01"), // new
-      ("https://ex.org/p1x", null))        // new (never fetched)
-    val mem = MemoryStream[(String, String)]
-    val q = graft.streaming.CurationStream.recrawlScreen(
-        mem.toDF().toDF("url", "lastmod"), log)
-      .writeStream.format("memory").queryName("trc")
-      .outputMode("append").start()
-    try { mem.addData(entries); q.processAllAvailable() } finally q.stop()
-    def canon(rows: Seq[org.apache.spark.sql.Row]) = rows
-      .map(r => (r.getString(0), r.getAs[String]("status")))
-      .sortBy(_._1)
-    val got = canon(spark.sql("SELECT * FROM trc").collect().toSeq)
-    val want = canon(graft.sources.Sitemaps.recrawlPlan(
-      entries.toDF("url", "lastmod"), log.fetches).collect().toSeq)
-    assert(got === want)
-    assert(got.toMap === Map(
-      "https://ex.org/p1" -> "stale", "https://ex.org/p2" -> "fresh",
-      "https://ex.org/p3" -> "new", "https://ex.org/p1x" -> "new"))
-  }
-
   test("expand: nested index resolves to leaves; depth bound holds") {
     val root = TempDirs.dir("graft-sm").toString
     val host = Files.createDirectories(

@@ -237,4 +237,22 @@ class SketchSpec extends SparkSpec {
       }
     }
   }
+
+  test("CMS counters: every depth row counts each row once; probes never undercount") {
+    // 23 distinct keys over width 16: every depth row has collisions
+    val keys = (0 until 300).map(i => s"k${i % 23}")
+    val sketch = graft.operators.Cms.counters(
+        keys.map(Tuple1(_)).toDF("key"), col("key"), 3, 16)
+      .localCheckpoint(true)
+    val perDepth = sketch.collect()
+      .groupBy(_.getAs[Int]("d")).map { case (d, rs) =>
+        d -> rs.map(_.getAs[Long]("c")).sum }
+    assert(perDepth === (0 until 3).map(_ -> keys.length.toLong).toMap)
+    val exact = keys.groupBy(identity).map { case (k, v) => k -> v.length.toLong }
+    val est = graft.operators.Cms.probe(exact.keys.toSeq.toDF("key"), sketch,
+        3, 16)
+      .collect().map(r => r.getAs[String]("key") -> r.getAs[Long]("est")).toMap
+    assert(est.keySet === exact.keySet)
+    exact.foreach { case (k, n) => assert(est(k) >= n, s"undercount at $k") }
+  }
 }

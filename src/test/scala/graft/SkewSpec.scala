@@ -48,23 +48,4 @@ class SkewSpec extends SparkSpec {
       assert(adaptive === plain, jt)
     }
   }
-
-  test("streaming dedup drops within-watermark duplicates") {
-    import spark.implicits._
-    import java.sql.Timestamp
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[graft.streaming.EventStreams.Ev]
-    def ev(id: Long, t: String) = graft.streaming.EventStreams.Ev(
-      id, Timestamp.valueOf(t), 1L, "click", 0.0)
-    mem.addData(ev(1, "2024-01-01 10:00:00"), ev(1, "2024-01-01 10:00:05"),
-      ev(2, "2024-01-01 10:01:00"))
-    val q = graft.streaming.EventStreams.dedupStream(mem.toDF(), "event_id")
-      .writeStream.format("memory").queryName("dedup")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    try q.awaitTermination(120000) finally q.stop()
-    val ids = spark.sql("SELECT event_id FROM dedup").collect().map(_.getLong(0))
-    assert(ids.sorted.toSeq === Seq(1L, 2L))
-  }
 }

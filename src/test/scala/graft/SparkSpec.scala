@@ -16,8 +16,8 @@ object SparkSpec {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
-      // bucketed-table tests use saveAsTable — keep the warehouse out
-      // of the repo working directory
+      // keep any warehouse Spark creates out of the repo working
+      // directory
       .config("spark.sql.warehouse.dir",
         TempDirs.dir("graft-warehouse").toString)
     Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }

@@ -107,4 +107,30 @@ class TimeSeriesSpec extends SparkSpec {
     // b: points (0,2),(1,6) → slope 4, intercept 2
     assert(got("b") === ((2L, Some(4.0), Some(2.0))))
   }
+
+  test("trailingZ: each bin scored against its lookback predecessors, spike flagged") {
+    import spark.implicits._
+    // hours 0..7 count 2 + (i % 3); hour 8 spikes to 9
+    val counts = (0 to 7).map(i => 2L + i % 3) :+ 9L
+    val hourly = counts.zipWithIndex.map { case (n, h) => (ts(h), n) }
+      .toDF("hour", "n")
+    val got = TimeSeries.trailingZ(hourly, keys = Seq.empty,
+        binCol = "hour", nCol = "n", lookback = 6)
+      .collect().map(r => (r.getTimestamp(0), r.getLong(1), r.getDouble(2),
+        r.getBoolean(3))).sortBy(_._1.getTime).toSeq
+    // only hours 6..8 have six predecessors
+    assert(got.map(_._1) === Seq(ts(6), ts(7), ts(8)))
+    got.zip(6 to 8).foreach { case ((_, n, z, anomaly), h) =>
+      val preds = counts.slice(h - 6, h)
+      val s = preds.sum
+      val ss = preds.map(p => p * p).sum
+      val mean = s.toDouble / 6
+      val variance = (ss.toDouble - s.toDouble * s / 6) / 5
+      val want = (n.toDouble - mean) / math.sqrt(variance)
+      assert(java.lang.Double.doubleToLongBits(z) ===
+        java.lang.Double.doubleToLongBits(want), s"hour $h")
+      assert(anomaly === (math.abs(want) > 3.0), s"hour $h")
+    }
+    assert(got.last._4, "the spike hour is flagged")
+  }
 }
