@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. A warmup pass (table
@@ -16,13 +15,7 @@ object Bench {
       args.headOption.map(list => Explain.targets(Some(list)).toSet)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session(s"local[$cpus]", cpus)
 
     // warmup: touch every table (file-index + footer caches) and force
     // one codegen'd aggregation through the pipeline
@@ -137,12 +130,14 @@ object Bench {
     val total = despiked.map(_._2).sum
     val full =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"min_of_2_despiked","queries":$qs,"first_runs":$frs,"failed":$failed,"n_queries":${despiked.size},"sf":"$sfDir"}"""
-    // Full per-query detail: printed early and persisted to a file. The
-    // harness keeps only the LAST ~2000 chars of output, so the full
-    // line (120+ queries, ~4 KB) can never be the final line — it would
-    // arrive truncated and unparseable.
+    // Full per-query detail: printed early and, for a full sweep,
+    // persisted to a file. The harness keeps only the LAST ~2000 chars
+    // of output, so the full line (120+ queries, ~4 KB) can never be the
+    // final line — it would arrive truncated and unparseable. A subset
+    // run leaves the file alone: it is the next sweep's despike
+    // reference for every query.
     println(full)
-    try {
+    if (subset.isEmpty) try {
       val p = java.nio.file.Paths.get("BENCH_FULL.json")
       java.nio.file.Files.write(p, (full + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable =>
@@ -167,7 +162,8 @@ object Bench {
     val failedNames = despiked.collect { case (k, _, _, false) => k }
     val failedCompact = failedNames.take(5).map("\"" + _ + "\"")
       .mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"min_of_2_despiked","queries":$hqs,"n_failed":${failedNames.size},"failed_sample":$failedCompact,"n_queries":${despiked.size},"full":"BENCH_FULL.json","sf":"$sfDir"}""")
+    val fullRef = if (subset.isEmpty) "\"full\":\"BENCH_FULL.json\"," else ""
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"min_of_2_despiked","queries":$hqs,"n_failed":${failedNames.size},"failed_sample":$failedCompact,"n_queries":${despiked.size},$fullRef"sf":"$sfDir"}""")
     spark.stop()
   }
 

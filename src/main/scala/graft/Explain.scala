@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints the formatted physical plan of one
   * or all SparkEntry queries. Used to keep plans honest at scale —
   * PushedFilters reaching the parquet scan, broadcast joins on
@@ -34,13 +32,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val names = targets(args.headOption)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.session("local[4]", "4")
     val queries = SparkEntry.queries
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1234,18 +1234,9 @@ object Main {
     SparkEntry.queries.getOrElse(name,
       fail(s"unknown query: $name (try: graft.Main query list)"))
 
-  private def session(): SparkSession = {
-    val builder = SparkSession.builder()
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    sys.env.get("GRAFT_MASTER").orElse(Some("local[*]"))
-      .foreach(builder.master)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  private def session(): SparkSession =
+    Tables.session(sys.env.getOrElse("GRAFT_MASTER", "local[*]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("query")) {

@@ -30,6 +30,24 @@ object Tables {
     "spark.hadoop.fs.file.impl" -> classOf[LocalFs].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Context].getName)
 
+  /** The session every entry point and spec runs on: [[sessionConfigs]],
+    * `partitions` shuffle partitions, the warehouse under [[TempDirs]]
+    * (no `spark-warehouse/` in the working directory), WARN logs, and
+    * no UI on a local master. Returns the running session if there is
+    * one.
+    */
+  def session(master: String, partitions: String): SparkSession = {
+    val b = SparkSession.builder().appName("graft").master(master)
+      .config("spark.sql.shuffle.partitions", partitions)
+      .config("spark.sql.warehouse.dir",
+        TempDirs.dir("graft-warehouse").toUri.toString)
+    if (master.startsWith("local")) b.config("spark.ui.enabled", "false")
+    sessionConfigs.foreach { case (k, v) => b.config(k, v) }
+    val s = b.getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     if (name == "events") normalizeEventTs(df) else df

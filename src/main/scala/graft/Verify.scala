@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,13 +11,7 @@ object Verify {
     val subset: Option[Set[String]] =
       args.lift(2).map(list => Explain.targets(Some(list)).toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session(s"local[$cpus]", cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => subset.forall(_.contains(name)) }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.MoveResult
 
-/** O16/O17 — report aggregations (SURVEY.md §2.3): the reference's
+/** O16 — report aggregations (SURVEY.md §2.3): the reference's
   * found/not-found/success/failure counters (app/app.py:133-152,
   * app/main.py:305-309) as DataFrames instead of prints.
   */
@@ -18,12 +18,6 @@ object Report {
     results.toDF()
       .groupBy("status")
       .agg(count(lit(1)).as("n"), sum(col("bytes")).as("bytes"))
-
-  /** O17: deterministic top-N sample plus the "... and N more" count. */
-  def sample(df: DataFrame, orderCol: String, n: Int): (DataFrame, Long) = {
-    val total = df.count()
-    (df.orderBy(col(orderCol)).limit(n), math.max(0L, total - n))
-  }
 
   /** Attach observe() metrics to a move-result plan: totals ride along
     * with the action instead of costing a second pass over the data

@@ -22,18 +22,15 @@ object ClusterQueries {
     * queries, fitted + written once per data directory (the fixture is
     * the MODEL WRITE; the queries under test are the artifact reads).
     */
-  private val kmModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def persistedModel(s: SparkSession, dir: String)
       : (Map[Int, Seq[Double]], DataFrame) = {
-    val path = kmModelMemo.computeIfAbsent(dir, _ => {
+    val path = graft.TempDirs.once("kmmodel", dir) {
       val p = graft.TempDirs.dir("graft_kmmodel").toString
       val (assign, model) = KMeans.fit(t(s, dir, "embeddings"),
         k = K, dim = Dim, iters = Iters)
       KMeans.writeModel(s, p, model, assign)
       p
-    })
+    }
     KMeans.readModel(s, path)
   }
 

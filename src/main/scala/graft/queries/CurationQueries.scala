@@ -37,14 +37,6 @@ object CurationQueries {
     d.select(col("doc_id"), explode(Text.tokens(col("text"))).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
 
-  /** Temp path of the generated raw-crawl corpus for
-    * a_pipeline_curate, written once per data directory (the fixture
-    * is the WRITE; the query under test is the library pipeline over
-    * the parquet input — the a_pipeline_move shape).
-    */
-  private val curateMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The bad-decode suffix, built by RUNNING the bad decode. */
   private val Moji = new String("café naïve résumé"
       .getBytes(java.nio.charset.StandardCharsets.UTF_8),
@@ -66,25 +58,27 @@ object CurationQueries {
     lit("</p><script>if (1<2) { d = '<p>no</p>'; }</script>" +
       "</body></html>"))
 
+  /** Temp path of the generated raw-crawl corpus for
+    * a_pipeline_curate, written once per data directory (the fixture
+    * is the WRITE; the query under test is the library pipeline over
+    * the parquet input — the a_pipeline_move shape).
+    */
   private def curatedInput(s: SparkSession, dir: String): String =
-    curateMemo.computeIfAbsent(dir, _ => {
+    graft.TempDirs.once("curate", dir) {
       val p = graft.TempDirs.dir("graft_curate").toString + "/raw.parquet"
       t(s, dir, "documents").select(col("doc_id"),
           rawPayload(col("doc_id"), col("text")).as("text"))
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
 
   /** Temp path of the dedup-variant raw corpus: the same payloads plus
     * SOURCE carried through (the quota group) and planted WITHIN-BATCH
     * exact duplicates — every doc_id%13==0 payload re-ingested under
     * doc_id+1000000 (a replayed crawl partition).
     */
-  private val curateDedupMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def curateDedupInput(s: SparkSession, dir: String): String =
-    curateDedupMemo.computeIfAbsent(dir, _ => {
+    graft.TempDirs.once("curate_dd", dir) {
       val p = graft.TempDirs.dir("graft_curate_dd").toString + "/raw.parquet"
       val base = t(s, dir, "documents").select(col("doc_id"),
         col("source"), rawPayload(col("doc_id"), col("text")).as("text"))
@@ -93,7 +87,7 @@ object CurationQueries {
             col("source"), col("text")))
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
 
   /** Temp path of the SHARED DECISION BASE: the screens + dedup pass
     * (markup → mojibake → PII → quality → exact dup → near-dup vs the
@@ -107,11 +101,8 @@ object CurationQueries {
     * policy evaluations). `a_pipeline_curate_dedup` still runs the
     * full chain itself — it is the gate on the chain.
     */
-  private val curateBaseMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def curateDecisionBase(s: SparkSession, dir: String): String =
-    curateBaseMemo.computeIfAbsent(dir, _ => {
+    graft.TempDirs.once("curate_base", dir) {
       val p = graft.TempDirs.dir("graft_curate_base").toString +
         "/decisions.parquet"
       val screened = graft.Pipelines.curateDecisions(
@@ -121,19 +112,16 @@ object CurationQueries {
         .curateDedupDecisions(screened, Some(curateIndex(s, dir)))
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
 
   /** Persisted band index over the HISTORICAL corpus (documents with
     * doc_id < 300, under their own 5000000+ id space — history has its
     * own ids): the cross-batch dedup memory the curate pipeline's
     * near-dup stage probes. Built once per data directory.
     */
-  private val curateIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def curateIndex(s: SparkSession, dir: String)
       : graft.operators.Dedup.BandIndex = {
-    val p = curateIdxMemo.computeIfAbsent(dir, _ => {
+    val p = graft.TempDirs.once("curate_idx", dir) {
       val path = graft.TempDirs.dir("graft_curate_idx").toString + "/band"
       val hist = t(s, dir, "documents").filter(col("doc_id") < 300)
         .select((col("doc_id") + 5000000L).as("doc_id"), col("text"))
@@ -141,7 +129,7 @@ object CurationQueries {
         graft.operators.Dedup.buildBandIndex(hist, "doc_id", "text",
           n = 5, bands = 3, rowsPerBand = 2), path)
       path
-    })
+    }
     graft.operators.Dedup.readBandIndex(s, p)
   }
 
@@ -149,12 +137,9 @@ object CurationQueries {
     * and written once per data directory (the fixture is the WRITE;
     * the gated query is the artifact READ + inline-deploy path).
     */
-  private val qmodelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def qualityModel(s: SparkSession,
                            dir: String): Map[String, BigDecimal] = {
-    val p = qmodelMemo.computeIfAbsent(dir, _ => {
+    val p = graft.TempDirs.once("qmodel", dir) {
       val path = graft.TempDirs.dir("graft_qmodel").toString + "/clf"
       val d = t(s, dir, "documents")
       val feats = graft.operators.Logistic
@@ -164,7 +149,7 @@ object CurationQueries {
         epochs = 3, lr = 0.5).last
       graft.operators.Logistic.writeModel(s, path, w3)
       path
-    })
+    }
     graft.operators.Logistic.readModel(s, p)
   }
 
@@ -181,19 +166,16 @@ object CurationQueries {
     * same label, hashed word-2-shingle features) — trained once per
     * data directory for the feature-space comparison query.
     */
-  private val qmodelBMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, BigDecimal]]()
-
   private def qualityModelBigram(s: SparkSession,
                                  dir: String): Map[String, BigDecimal] =
-    qmodelBMemo.computeIfAbsent(dir, _ => {
+    graft.TempDirs.once("qmodel_bigram", dir) {
       val d = t(s, dir, "documents")
       val feats = graft.operators.Logistic
         .hashedFeatures(d, col("source") === lit(DsirTarget), gram = 2)
         .localCheckpoint(false)
       graft.operators.Logistic.train(s, feats, d.count(),
         epochs = 3, lr = 0.5).last
-    })
+    }
 
   /** The FULLY-deployed artifact: [[qualityModel]]'s weights plus the
     * max-F1 operating point selected from the PR curve over the
@@ -202,12 +184,9 @@ object CurationQueries {
     * `a_pipeline_curate_thr` gates the artifact READ + the
     * threshold-gated deploy path.
     */
-  private val qthrMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def qualityTrainedThr(s: SparkSession, dir: String)
       : graft.operators.Logistic.Trained = {
-    val p = qthrMemo.computeIfAbsent(dir, _ => {
+    val p = graft.TempDirs.once("qthr", dir) {
       val path = graft.TempDirs.dir("graft_qthr").toString + "/clf"
       val m0 = graft.operators.Logistic.Trained(qualityModel(s, dir))
       val hold = evalSplit(t(s, dir, "documents"))
@@ -216,7 +195,7 @@ object CurationQueries {
       graft.operators.Logistic.writeTrained(s, path,
         m0.copy(threshold = Some(thr)))
       path
-    })
+    }
     graft.operators.Logistic.readTrained(s, p)
   }
 
@@ -226,11 +205,8 @@ object CurationQueries {
     * reports appended under day-0/1/2 — the fixture is the WRITE;
     * `a_funnel_ledger` gates the ledger READ + trend path.
     */
-  private val ledgerMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def funnelLedger(s: SparkSession, dir: String): String =
-    ledgerMemo.computeIfAbsent(dir, _ => {
+    graft.TempDirs.once("ledger", dir) {
       val path = graft.TempDirs.dir("graft_ledger").toString + "/funnel"
       val raw = s.read.parquet(curatedInput(s, dir))
       (0 to 2).foreach { w =>
@@ -240,7 +216,7 @@ object CurationQueries {
           graft.Pipelines.curationReport(decisions))
       }
       path
-    })
+    }
 
   /** Shared DuckDB CTE prefix replaying MixPlan.allocate (cap =
     * 3·available, budget = the full supply) + materializeEpochs —

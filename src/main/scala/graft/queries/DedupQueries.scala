@@ -19,6 +19,24 @@ import graft.operators.Dedup
   */
 object DedupQueries {
 
+  /** Build (once per data directory) and read back the persisted band
+    * index over documents(doc_id < 300) — shared by
+    * d_index_incremental (the daily check) and d_index_stats (the
+    * health report over the same artifact). The fixture is the INDEX
+    * WRITE; the queries under test are the read + incremental check.
+    */
+  private def persistedIndex(s: SparkSession, dir: String): Dedup.BandIndex = {
+    val idxPath = graft.TempDirs.once("bandidx", dir) {
+      val p = graft.TempDirs.dir("graft_bandidx").toString
+      val base = t(s, dir, "documents").filter(col("doc_id") < 300)
+        .select("doc_id", "text")
+      Dedup.writeBandIndex(Dedup.buildBandIndex(base, "doc_id", "text",
+        n = 5, bands = 3, rowsPerBand = 2), p)
+      p
+    }
+    Dedup.readBandIndex(s, idxPath)
+  }
+
   /** The tripled near-dup corpus shared by d_dup_clusters and
     * d_cluster_keeper: documents(doc_id < 150) ∪ drop-1-token copies
     * under +100000 ∪ drop-2-token copies under +200000. The slice is
@@ -31,35 +49,8 @@ object DedupQueries {
     * genuinely computed per query; only the fixture build (scan +
     * token-slice union) is shared.
     */
-  private val tripledMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, String)]]()
-
-  /** Temp path of the persisted band index for d_index_incremental,
-    * built once per data directory (the fixture is the INDEX WRITE;
-    * the query under test is the read + incremental check).
-    */
-  private val bandIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Build (once per data directory) and read back the persisted band
-    * index over documents(doc_id < 300) — shared by
-    * d_index_incremental (the daily check) and d_index_stats (the
-    * health report over the same artifact).
-    */
-  private def persistedIndex(s: SparkSession, dir: String): Dedup.BandIndex = {
-    val idxPath = bandIdxMemo.computeIfAbsent(dir, _ => {
-      val p = graft.TempDirs.dir("graft_bandidx").toString
-      val base = t(s, dir, "documents").filter(col("doc_id") < 300)
-        .select("doc_id", "text")
-      Dedup.writeBandIndex(Dedup.buildBandIndex(base, "doc_id", "text",
-        n = 5, bands = 3, rowsPerBand = 2), p)
-      p
-    })
-    Dedup.readBandIndex(s, idxPath)
-  }
-
   private def tripledCorpus(s: SparkSession, dir: String): DataFrame = {
-    val rows = tripledMemo.computeIfAbsent(dir, _ => {
+    val rows = graft.TempDirs.once("tripled", dir) {
       val d = t(s, dir, "documents").filter(col("doc_id") < 150)
         .select("doc_id", "text")
       val tok = Text.tokens(col("text"))
@@ -68,7 +59,7 @@ object DedupQueries {
         .union(d.select((col("doc_id") + 200000).as("doc_id"),
           array_join(slice(tok, lit(3), size(tok) - 2), " ").as("text")))
         .collect().map(r => (r.getLong(0), r.getString(1)))
-    })
+    }
     import s.implicits._
     s.createDataset(rows.toSeq).toDF("doc_id", "text")
       .localCheckpoint(false)

@@ -31,11 +31,8 @@ object GovernanceQueries {
     * classifier on the whole corpus, a tokenizer vocabulary on the
     * even docs.
     */
-  private val provMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def provenanceLedger(s: SparkSession, dir: String): String =
-    provMemo.computeIfAbsent(dir, _ => {
+    graft.TempDirs.once("prov", dir) {
       val path = graft.TempDirs.dir("graft_prov").toString + "/prov"
       val d = t(s, dir, "documents").select(col("doc_id"))
       val P = graft.operators.Provenance
@@ -47,7 +44,7 @@ object GovernanceQueries {
       P.append(s, path, "vocab/bpe", "vocab",
         d.filter(col("doc_id") % 2 === 0))
       path
-    })
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

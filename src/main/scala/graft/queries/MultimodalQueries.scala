@@ -32,11 +32,8 @@ object MultimodalQueries {
     * unpersisting checkpoint blocks between queries, where a cached
     * checkpointed frame would dangle.
     */
-  private val pngMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[(Long, Array[Byte])]]()
-
   private def pngCorpus(s: SparkSession, dir: String): DataFrame = {
-    val rows = pngMemo.computeIfAbsent(dir, _ => {
+    val rows = graft.TempDirs.once("png", dir) {
       import s.implicits._
       t(s, dir, "documents")
         .filter(col("doc_id") < 150)
@@ -48,7 +45,7 @@ object MultimodalQueries {
           (id, Multimodal.renderPng(id, w, h))
         })
         .collect()
-    })
+    }
     import s.implicits._
     s.createDataset(rows.toSeq).toDF("id", "content")
       .localCheckpoint(false)
@@ -57,11 +54,8 @@ object MultimodalQueries {
   /** Originals plus exact 2× NN-upscaled twins under id+100000 — the
     * perceptual-dedup fixture (same memo discipline as [[pngCorpus]]).
     */
-  private val pngTwinMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[(Long, Array[Byte])]]()
-
   private def pngTwinCorpus(s: SparkSession, dir: String): DataFrame = {
-    val twins = pngTwinMemo.computeIfAbsent(dir, _ => {
+    val twins = graft.TempDirs.once("png_twin", dir) {
       import s.implicits._
       t(s, dir, "documents")
         .filter(col("doc_id") < 150)
@@ -73,7 +67,7 @@ object MultimodalQueries {
           (id + 100000L, Multimodal.renderPngScaled(id, w, h, 2))
         })
         .collect()
-    })
+    }
     import s.implicits._
     pngCorpus(s, dir)
       .union(s.createDataset(twins.toSeq).toDF("id", "content")
@@ -506,9 +500,6 @@ object MultimodalQueries {
         .agg((-sum(col("term"))).cast("double").as("entropy_nats"))
     })
   )
-
-  private def hexDigit(i: Int) =
-    s"(strpos('0123456789abcdef', substring(md5(text), $i, 1)) - 1)"
 
   val oracleSql: Map[String, String] = Map(
     "m_binary_meta" ->

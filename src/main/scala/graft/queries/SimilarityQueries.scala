@@ -17,22 +17,16 @@ import graft.operators.Similarity
   */
 object SimilarityQueries {
 
-  /** Temp path of the persisted IVF index for s_index_ann, built once
-    * per data directory (the fixture is the INDEX WRITE; the query
-    * under test is the read + search).
-    */
-  private val ivfIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build (once per data directory) and read back the persisted IVF
     * index over the full embeddings table with the deterministic
     * vec_id<16 quantizer — shared by s_index_ann (the search) and
     * s_index_stats (the health report over the same artifact), the
-    * [[DedupQueries]] persistedIndex twin.
+    * [[DedupQueries]] persistedIndex twin. The fixture is the INDEX
+    * WRITE; the queries under test are the read + search.
     */
   private def persistedIvf(s: SparkSession, dir: String)
       : Similarity.IvfIndex = {
-    val idxPath = ivfIdxMemo.computeIfAbsent(dir, _ => {
+    val idxPath = graft.TempDirs.once("ivfidx", dir) {
       val p = graft.TempDirs.dir("graft_ivfidx").toString
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"),
@@ -42,7 +36,7 @@ object SimilarityQueries {
           col("embedding").as("cv"))
       Similarity.writeIvfIndex(Similarity.buildIvfIndex(e, cents), p)
       p
-    })
+    }
     Similarity.readIvfIndex(s, idxPath)
   }
 

@@ -48,15 +48,12 @@ object TextQueries {
         coalesce(graft.functions.Robots.crawlDelay(col("txt")),
           lit(1L)).as("delay_s"))
 
-  /** Temp path of the persisted crawl-frontier artifact (the URL-seen
+  /** The persisted crawl-frontier artifact (the URL-seen
     * index over the closed-form crawled set: documents < 300 under
     * their /d/ url space), written once per data directory — the
     * fixture is the WRITE; `f_frontier` / `f_frontier_stats` gate the
     * artifact READ path.
     */
-  private val frontierMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def frontierIndex(s: SparkSession, dir: String)
       : graft.operators.CrawlState.UrlIndex =
     graft.operators.CrawlState.readUrlIndex(s, frontierPath(s, dir))
@@ -67,7 +64,7 @@ object TextQueries {
     * follows).
     */
   private def frontierPath(s: SparkSession, dir: String): String =
-    frontierMemo.computeIfAbsent(dir, _ => {
+    graft.TempDirs.once("frontier", dir) {
       val path = graft.TempDirs.dir("graft_frontier").toString + "/urlseen"
       val crawled = t(s, dir, "documents").filter(col("doc_id") < 300)
         .select(concat(lit("https://ex"), pmod(col("doc_id"), lit(10)),
@@ -75,7 +72,7 @@ object TextQueries {
       graft.operators.CrawlState.writeUrlIndex(
         graft.operators.CrawlState.buildUrlIndex(crawled), path)
       path
-    })
+    }
 
   /** Temp path of the fetched-sitemap SPOOL (`<dir>/<host>/<file>`,
     * the [[graft.sources.Sitemaps.readFrom]] layout), written once per
@@ -88,11 +85,8 @@ object TextQueries {
     * The fixture is the fetcher's WRITE; `f_sitemap_feed` /
     * `f_sitemap_read` gate the file READ + parse + expand path.
     */
-  private val sitemapSpoolMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def sitemapSpool(s: SparkSession, dir: String): String =
-    sitemapSpoolMemo.computeIfAbsent(dir, _ => {
+    graft.TempDirs.once("sitemaps", dir) {
       val root = graft.TempDirs.dir("graft_sitemaps").toString
       val rows = t(s, dir, "documents")
         .select(pmod(col("doc_id"), lit(10)).as("host"), col("doc_id"))
@@ -152,7 +146,7 @@ object TextQueries {
             s"<urlset>$durls$extra</urlset>")
       }
       root
-    })
+    }
 
   /** Temp path of the persisted FETCH LOG artifact (the
     * when-did-I-fetch sibling of the frontier: crawled docs < 300,
@@ -163,16 +157,13 @@ object TextQueries {
     * `f_sitemap_recrawl` / `f_fetch_log_stats` gate the artifact READ
     * path.
     */
-  private val fetchLogMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def fetchLogArt(s: SparkSession, dir: String)
       : graft.operators.CrawlState.FetchLog =
     graft.operators.CrawlState.readFetchLog(s, fetchLogPath(s, dir))
 
   /** The shared fetch-log artifact's PATH (read-only consumers). */
   private def fetchLogPath(s: SparkSession, dir: String): String =
-    fetchLogMemo.computeIfAbsent(dir, _ => {
+    graft.TempDirs.once("fetchlog", dir) {
       val path = graft.TempDirs.dir("graft_fetchlog").toString + "/log"
       val fetched = t(s, dir, "documents").filter(col("doc_id") < 300)
         .select(concat(lit("https://ex"), pmod(col("doc_id"), lit(10)),
@@ -183,7 +174,7 @@ object TextQueries {
       graft.operators.CrawlState.writeFetchLog(
         graft.operators.CrawlState.buildFetchLog(fetched), path)
       path
-    })
+    }
 
   /** Temp path of the PIPELINE-D ledger: two crawl waves run
     * end-to-end through [[graft.Pipelines.crawlWave]] against fresh
@@ -197,11 +188,8 @@ object TextQueries {
     * fetch. The fixture is the WRITE; `a_pipeline_crawl` gates the
     * ledger READ (both waves' funnels).
     */
-  private val crawlWaveMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def crawlWaveLedger(s: SparkSession, dir: String): String =
-    crawlWaveMemo.computeIfAbsent(dir, _ => {
+    graft.TempDirs.once("crawlwave", dir) {
       val root = graft.TempDirs.dir("graft_crawlwave").toString
       val d = t(s, dir, "documents")
       val crawled = d.filter(col("doc_id") < 300)
@@ -250,7 +238,13 @@ object TextQueries {
         "wave-1", resolution = Some(resolution),
         ledgerPath = Some(s"$root/ledger"))
       s"$root/ledger"
-    })
+    }
+
+  private def spoolEntries(s: SparkSession, dir: String): DataFrame =
+    graft.sources.Sitemaps.readFrom(s, sitemapSpool(s, dir))
+      .filter(col("kind") === "urlset")
+      .select(explode(col("entries")).as("e"))
+      .select(col("e.url").as("url"), col("e.lastmod").as("lastmod"))
 
   /** Temp root of the RECRAWL-driven wave: the lastmod→refetch loop
     * closed end-to-end. Fresh crawl-state artifacts (pipeline D
@@ -265,17 +259,8 @@ object TextQueries {
     * every fetched url, blocked urls unchanged, fetched no-signal
     * urls → unknown).
     */
-  private val recrawlWaveMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def spoolEntries(s: SparkSession, dir: String): DataFrame =
-    graft.sources.Sitemaps.readFrom(s, sitemapSpool(s, dir))
-      .filter(col("kind") === "urlset")
-      .select(explode(col("entries")).as("e"))
-      .select(col("e.url").as("url"), col("e.lastmod").as("lastmod"))
-
   private def recrawlWaveRoot(s: SparkSession, dir: String): String =
-    recrawlWaveMemo.computeIfAbsent(dir, _ => {
+    graft.TempDirs.once("recrawl", dir) {
       val root = graft.TempDirs.dir("graft_recrawl").toString
       val d = t(s, dir, "documents")
       val crawled = d.filter(col("doc_id") < 300)
@@ -311,7 +296,7 @@ object TextQueries {
         java.sql.Timestamp.valueOf("2024-02-01 09:00:00"),
         "recrawl-0", refetch = true)
       root
-    })
+    }
 
   /** Temp root of the BUDGETED refetch wave — plan → budget → wave as
     * ONE chain: fresh crawl-state artifacts (the wave mutates them),
@@ -327,11 +312,8 @@ object TextQueries {
     * wave), budgeted allowed urls advance, robots-blocked budgeted
     * urls keep their status.
     */
-  private val budgetWaveMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def budgetWaveRoot(s: SparkSession, dir: String): String =
-    budgetWaveMemo.computeIfAbsent(dir, _ => {
+    graft.TempDirs.once("budgetwave", dir) {
       val root = graft.TempDirs.dir("graft_budgetwave").toString
       val d = t(s, dir, "documents")
       val crawled = d.filter(col("doc_id") < 300)
@@ -369,7 +351,7 @@ object TextQueries {
         java.sql.Timestamp.valueOf("2024-02-01 09:00:00"),
         "budget-0", refetch = true)
       root
-    })
+    }
 
   /** Temp root of the SITEMAP-DISCOVERY wave — the crawl-ops chain's
     * last composition seam closed: each host's robots.txt DECLARES
@@ -383,11 +365,8 @@ object TextQueries {
     * plan → refetch. The fixture is the WRITE; `a_pipeline_sitemap`
     * gates the wave's ledger funnel.
     */
-  private val sitemapWaveMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def sitemapWaveRoot(s: SparkSession, dir: String): String =
-    sitemapWaveMemo.computeIfAbsent(dir, _ => {
+    graft.TempDirs.once("sitemapwave", dir) {
       val root = graft.TempDirs.dir("graft_sitemapwave").toString
       val d = t(s, dir, "documents")
       val crawled = d.filter(col("doc_id") < 300)
@@ -421,7 +400,7 @@ object TextQueries {
         java.sql.Timestamp.valueOf("2024-02-01 09:00:00"),
         "sitemap-0", ledgerPath = Some(s"$root/ledger"))
       root
-    })
+    }
 
   /** Generated markup shared by `t_html_tables` and
     * `t_table_linearize`: three tables — a headered 3-row grid with
@@ -570,13 +549,10 @@ object TextQueries {
     * written once per (data directory, kind) — the fixture is the
     * WRITE; the gated queries are the artifact READ + encode paths.
     */
-  private val tokMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def tokenizerArtifact(s: SparkSession, dir: String, kind: String)
       : graft.operators.Tokenizer.VocabModel = {
     val Tok = graft.operators.Tokenizer
-    val p = tokMemo.computeIfAbsent(s"$dir#$kind", _ => {
+    val p = graft.TempDirs.once(s"tok:$kind", dir) {
       val path = graft.TempDirs.dir("graft_tok").toString + "/" + kind
       val wf = Tok.wordFreqs(t(s, dir, "documents")).localCheckpoint(false)
       val pieces = Tok.induceVocab(wf, kind).localCheckpoint(false)
@@ -594,7 +570,7 @@ object TextQueries {
       }
       Tok.writeVocab(s, path, kind, pieces, uses)
       path
-    })
+    }
     Tok.readVocab(s, p)
   }
 

@@ -39,13 +39,7 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.session("local[32]", "32")
 
     if (!new java.io.File(s"$dst/lineitem.parquet").exists()) {
       // region/nation are fixed-size in TPC-H: copy once, no offset

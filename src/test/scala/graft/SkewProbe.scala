@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** On-demand mega-host SKEW probe (test scope — a measurement
@@ -18,13 +17,7 @@ import org.apache.spark.sql.functions._
 object SkewProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(2000000L)
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.session("local[32]", "32")
 
     // 90% of the wave on one host, the rest across 1000 small hosts
     val wave = spark.range(n).select(

@@ -10,19 +10,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      // keep any warehouse Spark creates out of the repo working
-      // directory
-      .config("spark.sql.warehouse.dir",
-        TempDirs.dir("graft-warehouse").toString)
-    Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Tables.session("local[4]", "4")
 }
