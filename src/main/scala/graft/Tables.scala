@@ -23,10 +23,24 @@ object Tables {
     * unrelated reads and race across threads. `file:` is [[LocalFs]]
     * for `FileSystem` and `FileContext` alike, which serves Hadoop's
     * permission reads and writes without forking `chmod` / `ls` per file.
+    *
+    * `codegen.cache.maxEntries` sizes Spark's generated-class cache (a
+    * static conf, read once per JVM when `CodeGenerator` first loads;
+    * default 100) to the program's plan vocabulary. One pass over the
+    * six iterative families of perfbench's `query_tail` compiles about
+    * 550 classes, so at 100 every warm pass evicted the last pass's
+    * classes and recompiled 471 of them with Janino. At 2,000 (over 3x
+    * one pass; no single query exceeds 170) a warm pass compiles 12,
+    * and `query_tail` `warm_cpu_s` fell 21.8 -> 16.3 s (median of 10
+    * pairs, `local[4]`, SCALE.md section 52). `CodegenMetrics` puts a
+    * compile at 6.8 KB of source and 2.4 classes of 3.0 KB bytecode, so
+    * a full cache holds about 28 MB. This keeps compiled code only:
+    * no data and no results, and every run still recomputes every row.
     */
   val sessionConfigs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.codegen.cache.maxEntries" -> "2000",
     "spark.hadoop.fs.file.impl" -> classOf[LocalFs].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Context].getName)
 
